@@ -37,35 +37,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing stays at the parallelism-first default:
-      // respecting the 64 MB advisory size instead
-      // (parallelismFirst=false, the docs' batch-ETL suggestion) was
-      // MEASURED here and reverted — at bench scale it coalesces
-      // every post-shuffle stage to ONE partition, serializing
-      // sort/window/state-heavy operators (A/B, min of 3:
-      // q_window_frame 1.0 → 3.2 s, q_agg_quantile 1.6 → 3.4 s,
-      // q_stream_psi 1.8 → 7.6 s, q_pagerank_conv 12.6 → 19.0 s).
-      // the generated-class cache defaults to 100 entries — a
-      // 256-query session compiles thousands of codegen fragments,
-      // so by the time a query is re-run (the min-of-passes
-      // protocol, or any production re-submission) its classes are
-      // long evicted and every pass pays full janino recompilation.
-      // Sized for this workload; a few-hundred-KB per entry.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // shuffle/spill scratch on tmpfs: the VM's block device shows
-      // multi-second I/O stalls (high iowait, zero GC) that dwarf the
-      // actual query work at these data sizes
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.getOrCreate()
     // Untimed warmup at the smallest SF: JIT-compiles the shared
     // evaluation paths (codegen harness, interpreted higher-order
     // functions, hash/sort/window machinery, md5) so timed numbers

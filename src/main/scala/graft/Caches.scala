@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import graft.operators.Checkpoints
 
 /** Session-scoped registry of persisted shared intermediates (the
   * tokenized corpus, shingle tables, signature frames — see
@@ -58,14 +59,28 @@ object Caches {
     * concurrent broadcast-exchange threads race a COLD cache fill and
     * each recomputes the full subtree (measured 68× on q_als, 2.3× on
     * q_conformal). Persist mode fills the cache with one count();
-    * "none" mode (the scale-probe posture) takes an eager
-    * localCheckpoint, which also truncates lineage. Use for any frame
-    * with ≥2 consumers where at least one sits under a broadcast.
+    * "none" mode (the scale-probe posture) takes an eager checkpoint
+    * ([[Checkpoints.ckpt]]), which also truncates lineage. Use for any
+    * frame with ≥2 consumers where at least one sits under a broadcast.
     */
   def pinned(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.get(modeKey, "persist") == "none")
-      df.localCheckpoint(true)
+      Checkpoints.ckpt(df)
     else { val c = cached(df); c.count(); c }
+
+  /** Stage a BOUNDED frame that an iterative trainer scans once per
+    * step: it must be materialized even in mode "none" (where
+    * [[cached]] is a no-op), or every step re-derives it from the
+    * source scan — re-tokenizing the corpus per gradient step. "none"
+    * mode takes a lazy checkpoint ([[Checkpoints.ckptLazy]]: the first
+    * step's job materializes it), every other mode persists. Only for
+    * frames far smaller than the exploded tables mode "none" exists
+    * for (a few doubles per document).
+    */
+  def staged(df: DataFrame): DataFrame =
+    if (df.sparkSession.conf.get(modeKey, "persist") == "none")
+      Checkpoints.ckptLazy(df)
+    else cached(df)
 
   /** Permanent callbacks run on every [[releaseAll]] — for
     * DRIVER-side memos that shadow a Spark cache (q_vec_pca's

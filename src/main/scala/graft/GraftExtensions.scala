@@ -9,8 +9,9 @@ import graft.functions.{DeflateSize, JaroWinkler, MortonCode, VectorDot, VectorN
   * expressions available to SQL users, either at session build time
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
-  *   // or via config, no code change:
+  *   builder.withExtensions(new GraftExtensions) ...
+  *   // or via config, no code change (graft.Session reads it from
+  *   // -Dspark.sql.extensions=graft.GraftExtensions):
   *   // spark.sql.extensions=graft.GraftExtensions
   * }}}
   *

@@ -156,9 +156,10 @@ object GraphOps {
     val degN = deg.withColumnRenamed("src", "node")
     val n = deg.count()
     val theta = prScale / prConvThetaDen
-    // |V|-sized shuffle-partition override for the loop (restored in
-    // the finally): stack sampling showed the iteration floor is the
-    // bypass-merge shuffle writer's per-partition file churn — every
+    // |V|-sized shuffle-partition override for the loop (scoped by
+    // Session.withConf, which restores the prior state): stack
+    // sampling showed the iteration floor is the bypass-merge
+    // shuffle writer's per-partition file churn — every
     // tiny |V| exchange wrote session-parallelism² blocks per
     // iteration (32 maps × 32 reducers at bench scale) and the mmap
     // concat of those ~KB files dominated executor time. The rank
@@ -168,9 +169,8 @@ object GraphOps {
     // parallelism — the streamShuffleParts discipline). The |E| side
     // is untouched: the bucketed substrate join keeps its own bucket
     // count, so per-iteration edge parallelism is unchanged.
-    val sessParts = s.conf.get("spark.sql.shuffle.partitions", "32")
-    val vParts = math.max(4L,
-      math.min(sessParts.toInt.toLong, n / 250000L + 1)).toInt
+    val vParts = math.max(4L, math.min(
+      graft.Session.shufflePartitions(s).toLong, n / 250000L + 1)).toInt
     // deg RIDES THE RANK FRAME: every node receives mass every round
     // (symmetric substrate ⇒ deg ≥ 1 and no dangling nodes), so the
     // node set is invariant and deg can be carried through each
@@ -182,8 +182,8 @@ object GraphOps {
       col("deg"))
     var iters = 0      // first iteration index where delta < θ, once found
     var converged = false
-    s.conf.set("spark.sql.shuffle.partitions", vParts.toString)
-    try {
+    graft.Session.withConf(s,
+      "spark.sql.shuffle.partitions" -> vParts.toString) {
     while (!converged && iters < prConvMaxIters) {
       val batch = math.min(prConvBatch, prConvMaxIters - iters)
       // chain `batch` sub-iterations lazily: each next_j carries its
@@ -245,7 +245,7 @@ object GraphOps {
           rank = nexts(batch - 1).select("node", "nr", "deg")
       }
     }
-    } finally s.conf.set("spark.sql.shuffle.partitions", sessParts)
+    }
     // deg already rides the rank frame — no final degN join either
     rank
       .select(col("node"), col("deg"),
@@ -293,19 +293,19 @@ object GraphOps {
     var dist = seed
     var frontier = seed.select("node")
     for (i <- 1 to bfsHops) {
-      val novel = frontier.withColumnRenamed("node", "src")
+      // lazy lineage cut: each hop's delta is referenced twice
+      // (next frontier + the distance union), so without this the
+      // plan re-derives every earlier hop along each path — ~2^hops
+      // subtrees whose task-scheduling overhead dominated the bench
+      // (200-node plan for 3 hops). The lazy checkpoint keeps query
+      // CONSTRUCTION free (ContractSpec builds all plans) and
+      // materializes each tiny delta once at execution.
+      val novel = Checkpoints.ckptLazy(frontier
+        .withColumnRenamed("node", "src")
         .join(e, "src")
         .select(col("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(i.toLong).as("dist"))
-        // lazy lineage cut: each hop's delta is referenced twice
-        // (next frontier + the distance union), so without this the
-        // plan re-derives every earlier hop along each path — ~2^hops
-        // subtrees whose task-scheduling overhead dominated the bench
-        // (200-node plan for 3 hops). Lazy localCheckpoint keeps
-        // query CONSTRUCTION free (ContractSpec builds all plans) and
-        // materializes each tiny delta once at execution.
-        .localCheckpoint(false)
+        .select(col("node"), lit(i.toLong).as("dist")))
       dist = dist.union(novel)
       frontier = novel.select("node")
     }
@@ -380,8 +380,8 @@ object GraphOps {
     // legs, the closing join), and each reference re-embeds the whole
     // nested LSH subtree — the printed plan was 3679 lines with 95
     // parquet-scan subtrees, and q_triangles spent ~3.5 s PLANNING a
-    // 826-pair graph (TriSkewDiag: skew absent — max outdeg 12,
-    // 2374 wedge rows; the wedge join itself is trivial here). ckpt
+    // 826-pair graph (skew absent — max outdeg 12, 2374 wedge rows,
+    // measured in r11; the wedge join itself is trivial here). ckpt
     // collapses the input to one leaf, exactly why q_kcore (which
     // already ckpt's the same pairs) ran 4× faster on the same input.
     // Eager, so the shared family cache fills here as before;
@@ -464,7 +464,7 @@ object GraphOps {
     // edge list oscillates — every node's label flips prefix side
     // every round (round-r labels of s-nodes are p-labels for even
     // r, s-labels for odd, by induction on the two-coloring), so the
-    // changed set is 100% of V at every round (LpDiag at sf1.0:
+    // changed set is 100% of V at every round (measured at sf1.0:
     // changed=210000/210000, edges-into-affected=100% of E, all
     // rounds) and a frontier restriction adds pure overhead
     // (measured 14.0 s vs 6.9 s at sf1.0). [[labelPropagateDelta]]
@@ -487,20 +487,18 @@ object GraphOps {
     var prev = e.groupBy(col("dst").as("node"))
       .agg(min(col("src")).as("lbl"))
     if (iters == 1) return prev
-    prev = prev.localCheckpoint(false)
-    var lbl = lpVote(e, prev).localCheckpoint(false)
+    prev = Checkpoints.ckptLazy(prev)
+    var lbl = Checkpoints.ckptLazy(lpVote(e, prev))
     for (_ <- 3 to iters) {
       val delta = lbl.join(prev.withColumnRenamed("lbl", "plbl"), "node")
         .filter(col("lbl") =!= col("plbl"))
         .select(col("node").as("src"))
-      val affected = e.join(delta, "src")
-        .select(col("dst")).distinct()
-        .localCheckpoint(false)
+      val affected = Checkpoints.ckptLazy(e.join(delta, "src")
+        .select(col("dst")).distinct())
       val revoted = lpVote(e.join(affected, "dst"), lbl)
-      val next = revoted.unionByName(
+      val next = Checkpoints.ckptLazy(revoted.unionByName(
         lbl.join(affected.withColumnRenamed("dst", "node"),
-          Seq("node"), "left_anti"))
-        .localCheckpoint(false)
+          Seq("node"), "left_anti")))
       prev = lbl
       lbl = next
     }
@@ -669,7 +667,7 @@ object GraphOps {
     // source table (the edge list is derived from it alone).
     val bytes = graft.sinks.Layout.sourceBytes(
       s, d.stripSuffix("/") + "/lineitem.parquet")
-    val floor = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val floor = graft.Session.shufflePartitions(s)
     val perBucket = 64L << 20
     val sized = (bytes + perBucket - 1) / perBucket
     math.max(floor.toLong, math.min(4L * floor, sized)).toInt
@@ -878,10 +876,8 @@ object GraphOps {
     // scan), sf100 596 → 492 s (inside this host's stall variance),
     // so the straight scans stay — on a cluster the substrate scan
     // is the cheap, partition-local path. A second measured
-    // alternative, per-direction SPLIT TABLES (HitsSplitDiag /
-    // [[coEdgesDirSplit]]), is the r10 follow-up to the same
-    // question; q_hits switches only if the diag's two-run comparison
-    // says so.
+    // alternative, per-direction SPLIT TABLES, was deleted in r11:
+    // its win sat inside host noise.
     hitsCore(edges.filter(col("src") >= lpSBit), // s → p
       edges.filter(col("src") < lpSBit))         // p → s
   }
@@ -894,22 +890,20 @@ object GraphOps {
       // hub update reads the p→s direction so the edge side is again
       // joined on its bucket key; the score frame is |V|-sized
       // (shuffle_hash: never re-sort the |E| side — the lpVote rule).
-      // Each half-round's score frame is lineage-cut (lazy local
+      // Each half-round's score frame is lineage-cut (lazy
       // checkpoint, the q_bfs discipline): hub_i is referenced by
       // auth_i AND the final max + top-k, so without the cut the
       // reference count of round i's subtree doubles per later round
       // (measured at sf10: 142 s of mostly re-execution without the
       // cuts).
-      hub = pEdges
+      hub = Checkpoints.ckptLazy(pEdges
         .join(auth.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
         .groupBy("dst").agg(sum(col("a")).as("h"))
-        .select(col("dst").as("node"), col("h"))
-        .localCheckpoint(false)
-      auth = sEdges
+        .select(col("dst").as("node"), col("h")))
+      auth = Checkpoints.ckptLazy(sEdges
         .join(hub.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
         .groupBy("dst").agg(sum(col("h")).as("a"))
-        .select(col("dst").as("node"), col("a"))
-        .localCheckpoint(false)
+        .select(col("dst").as("node"), col("a")))
     }
     def top(scores: DataFrame, c: String, role: String): DataFrame = {
       val m = broadcast(scores.agg(max(col(c)).as("__m")))
@@ -967,9 +961,8 @@ object GraphOps {
         .join(dist.withColumnRenamed("node", "src").hint("shuffle_hash"),
           "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(false)
+      dist = Checkpoints.ckptLazy(dist.union(relaxed)
+        .groupBy("node").agg(min(col("dist")).as("dist")))
     }
     dist.orderBy("node")
       .select(lpDecode(col("node")).as("node"), col("dist"))

@@ -440,10 +440,10 @@ object MultimodalOps {
       }.toDF("doc_id", "dh_hi", "dh_lo")
   }
 
-  /** The banded signature frame (doc_id, dh_hi, dh_lo, band, key) —
-    * shared by [[q_media_dhash]] and the bucket-skew diagnostic.
+  /** The banded signature frame (doc_id, dh_hi, dh_lo, band, key)
+    * that [[q_media_dhash]] buckets on.
     */
-  private[graft] def dhashBandedForDiag(s: SparkSession, dir: String)
+  private def dhashBanded(s: SparkSession, dir: String)
     : DataFrame = {
     implicit val sp: SparkSession = s
     import s.implicits._
@@ -483,7 +483,7 @@ object MultimodalOps {
     // exchange reuse still decodes the corpus once, not twice
     val wb = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "key")
-    val banded = dhashBandedForDiag(s, dir)
+    val banded = dhashBanded(s, dir)
       .withColumn("__bsz", count(lit(1)).over(wb))
       .filter(col("__bsz") <= dhashBandCap)
       .drop("__bsz")

@@ -140,7 +140,7 @@ object Recommender {
     // repartition NO later consumer exchanges the |R|-sized frame
     // again — measured at sf10 (29M ratings, 1.5M customers), each
     // avoided exchange + re-hash is tens of seconds.
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = graft.Session.shufflePartitions(s)
     val rat = pin(s, alsRatings(s, dir).repartition(np, col("c")))
     def asLit(v: DataFrame): DataFrame =
       v.collect().map { r =>

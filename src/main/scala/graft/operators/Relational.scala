@@ -285,7 +285,7 @@ object Relational {
       col("l_extendedprice").cast("double").as("v"),
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
       col("l_suppkey"))
-    val np = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val np = graft.Session.shufflePartitions(s)
     // ties in v are harmless: order statistics are tie-order invariant
     val ranked = ScalableRank.withRank(li, np, "g",
       Seq("v", "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
@@ -3004,7 +3004,7 @@ object Relational {
     // (rank/ntile output is exact and partition-count-invariant, so
     // this only sets parallelism — scale-adaptive per the brief)
     val dec = ScalableRank.withNtile(spend,
-      s.conf.get("spark.sql.shuffle.partitions", "32").toInt, "g",
+      graft.Session.shufflePartitions(s), "g",
       Seq("cents", "o_custkey"), 10, "decile")
     val perDec = dec.groupBy("decile")
       .agg(count(lit(1)).as("n_customers"), sum(col("cents")).as("dc"))
@@ -3081,7 +3081,7 @@ object Relational {
     val o = t(s, dir, "orders")
       .select(col("o_orderpriority"), col("o_orderkey"),
         col("o_totalprice").cast("decimal(18,2)").as("p"))
-    val np = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val np = graft.Session.shufflePartitions(s)
     ScalableRank.withNtile(o, np, "o_orderpriority",
         Seq("p", "o_orderkey"), 10, "band")
       .withColumn("band", col("band").cast("long"))
@@ -3493,7 +3493,7 @@ object Relational {
     val nn = broadcast(cal.agg(count(lit(1)).as("n_cal"))
       .selectExpr("n_cal",
         "least((9 * (n_cal + 1) + 9) div 10, n_cal) AS k"))
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = graft.Session.shufflePartitions(s)
     val radius = broadcast(
       ScalableRank.withRank(cal, np, "g", Seq("resid", "id"), "rn")
         .crossJoin(nn).filter(col("rn") === col("k"))

@@ -799,9 +799,12 @@ object VectorOps {
     * is within each row's own array), then a partial-combining
     * aggregate leaves ≤ 2080 cells per mapper on the shuffle. Element
     * values go through the proven float → DOUBLE → DECIMAL(20,8)
-    * cast (the labelCentroids discipline), products are exact
-    * DECIMAL(38,16), sums exact — both engines agree bit-for-bit
-    * before the one double division at the end.
+    * cast (the labelCentroids discipline), sums are exact. Products
+    * are NOT quite exact: Spark types a DECIMAL(20,8) product
+    * DECIMAL(38,13) (precision 41 overflows 38), so each rounds
+    * HALF_UP to 13 places before the DECIMAL(38,16) cast, where the
+    * DuckDB twin keeps all 16 — a ≤ n·5e-14 gap in a cell's sum that
+    * the 6-place rounding of the final cov absorbs.
     */
   private[graft] def covCells(s: SparkSession, dir: String): DataFrame =
     graft.Caches.cached(covCellsOf(t(s, dir, "embeddings")))
@@ -815,18 +818,29 @@ object VectorOps {
     // emit a FLAT product array (no per-pair struct), aggregate by
     // flat position, and recover (i, j) from the position through a
     // broadcast d(d+1)/2-row lookup built from the same upper-
-    // triangle walk. Same exact DECIMAL(38,16) products, same sums
-    // (CovDiag asserts cell-identical values across shapes); measured
-    // 8.5 → 2.7 s. Scale shape unchanged: map-local generation,
-    // partial-combining aggregate, d²-bounded lookup.
+    // triangle walk. Same products, same sums (VectorOpsSpec pins
+    // every cell against a driver-side BigDecimal reference);
+    // measured 8.5 → 2.7 s. Scale shape unchanged: map-local
+    // generation, partial-combining aggregate, d²-bounded lookup.
     val d = vecDim
+    // the flat-position lookup holds only for d-element vectors: a
+    // shorter array would map positions to the wrong (i, j) and a
+    // longer one past the lookup (dropped by the join), so a ragged
+    // vector fails the query instead of mislabeling cells
+    val checked = e.select(
+      when(col("embedding").isNull || size(col("embedding")) === d,
+        col("embedding"))
+        .otherwise(raise_error(concat(
+          lit("covCellsOf: embedding of size "),
+          size(col("embedding")).cast("string"),
+          lit(s", expected vecDim = $d"))))
+        .as("embedding"))
+    // integer `div`: pos is BIGINT like the aggregate side's key
     val lut = e.sparkSession.range(0, d.toLong).select(col("id").as("i"))
       .select(col("i"), explode(expr(s"sequence(i, ${d - 1})")).as("j"))
-      .select(
-        (col("i") * d - col("i") * (col("i") - 1) / 2
-          + col("j") - col("i")).as("pos"),
+      .select(expr(s"i * $d - i * (i - 1) div 2 + j - i").as("pos"),
         col("i"), col("j"))
-    val prods = e.select(expr(
+    val prods = checked.select(expr(
       "transform(embedding, v -> CAST(CAST(v AS DOUBLE) AS DECIMAL(20,8)))")
       .as("d"))
       .select(posexplode(expr(
@@ -838,7 +852,7 @@ object VectorOps {
       .agg(sum(col("p")).as("spp"), count(lit(1)).as("n"))
       .join(broadcast(lut), "pos")
       .select("i", "j", "spp", "n")
-    val sums = e.select(posexplode(col("embedding")).as(Seq("pos", "x")))
+    val sums = checked.select(posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy(col("pos").cast("long").as("pos"))
       .agg(sum(col("x").cast("double").cast("decimal(20,8)")).as("sv"))
     // covCells wraps this in the registered shared cache: q_vec_cov

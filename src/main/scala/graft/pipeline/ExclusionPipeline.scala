@@ -221,8 +221,9 @@ object ExclusionPipeline {
     // MATERIALIZED shuffle of the dedup stage inside parsePages, not
     // the raw parse — only the cheap URL branch (one firstForm scan)
     // re-runs. Dropping the cache removes a full per-pass
-    // materialization (measured: 3.2–4.6 s cached-cold → ~1.3 s
-    // uncached under the cold-pass protocol, value-identical).
+    // materialization (r11, 32 cores: 3.2–4.6 s cached-cold before,
+    // value-identical after; uncached it runs 3.1 s at sf0.1 on 4
+    // cores, SpotBench min of 5).
     parsePages(pages)
       .select(col("id").cast("long").as("doc_id"), col("key"), col("value"))
       .orderBy("doc_id", "key")

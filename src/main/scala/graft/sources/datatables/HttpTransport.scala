@@ -46,6 +46,38 @@ import org.json4s.jackson.JsonMethods
 object HttpTransport {
   val connectTimeoutMs = 15000
   val readTimeoutMs = 60000
+
+  /** The one HttpURLConnection request both portal clients make
+    * (page fetches here, bootstrap and login in
+    * [[UrlConnectionHttpClient]]): headers set in the given order,
+    * the body (if any) sent with a fixed length, and this object's
+    * timeouts — HttpURLConnection defaults to INFINITE ones, so a
+    * stalled server would wedge the Spark task (or the driver, via
+    * the count() probe in planInputPartitions, or the login) forever.
+    * Redirects follow the JDK default unless `followRedirects` is
+    * false. Returns the connection with the request sent; the caller
+    * reads the response.
+    */
+  private[datatables] def send(method: String, url: String,
+    headers: Seq[(String, String)], body: Option[Array[Byte]],
+    followRedirects: Boolean = true): HttpURLConnection = {
+    val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod(method)
+    conn.setConnectTimeout(connectTimeoutMs)
+    conn.setReadTimeout(readTimeoutMs)
+    if (!followRedirects) conn.setInstanceFollowRedirects(false)
+    headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
+    body.foreach { bytes =>
+      conn.setDoOutput(true)
+      conn.setFixedLengthStreamingMode(bytes.length)
+      val out = conn.getOutputStream
+      try out.write(bytes) finally out.close()
+    }
+    conn
+  }
+
+  private[datatables] def readText(in: java.io.InputStream): String =
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
 }
 
 case class HttpTransport(
@@ -84,24 +116,13 @@ case class HttpTransport(
     JsonMethods.compact(JsonMethods.render(body))
   }
 
-  private def post(body: String): String = {
-    val conn = new URL(endpoint).openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("POST")
-    // HttpURLConnection defaults to INFINITE timeouts — a stalled
-    // server would wedge the Spark task (or the driver, via the
-    // count() probe in planInputPartitions) forever
-    conn.setConnectTimeout(HttpTransport.connectTimeoutMs)
-    conn.setReadTimeout(HttpTransport.readTimeoutMs)
-    conn.setDoOutput(true)
-    conn.setRequestProperty("Content-Type", "application/json")
-    sessionHeaders.foreach { case (k, v) => conn.setRequestProperty(k, v) }
-    val bytes = body.getBytes("UTF-8")
-    conn.setFixedLengthStreamingMode(bytes.length)
-    val out = conn.getOutputStream
-    try out.write(bytes) finally out.close()
-    val in = conn.getInputStream
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
+  /** getInputStream throws on an error status (≥ 400) — what
+    * [[RetryingTransport]] retries the portal's 503s on.
+    */
+  private def post(body: String): String =
+    HttpTransport.readText(HttpTransport.send("POST", endpoint,
+      ("Content-Type" -> "application/json") +: sessionHeaders.toSeq,
+      Some(body.getBytes("UTF-8"))).getInputStream)
 
   override def count(sc: Option[String], sv: Option[String]): Long =
     JsonMethods.parse(post(payload(PageRequest(columns, sc, sv, 0, 1)))) \
@@ -142,20 +163,11 @@ object UrlConnectionHttpClient extends SessionBootstrap.HttpClient {
   private def exchange(method: String, url: String,
     form: Option[Map[String, String]],
     headers: Map[String, String]): SessionBootstrap.HttpResponse = {
-    val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod(method)
-    conn.setInstanceFollowRedirects(false)
-    headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
-    form.foreach { f =>
-      conn.setDoOutput(true)
-      val body = f.map { case (k, v) =>
-        URLEncoder.encode(k, "UTF-8") + "=" + URLEncoder.encode(v, "UTF-8")
-      }.mkString("&")
-      val bytes = body.getBytes("UTF-8")
-      conn.setFixedLengthStreamingMode(bytes.length)
-      val out = conn.getOutputStream
-      try out.write(bytes) finally out.close()
-    }
+    val body = form.map(_.map { case (k, v) =>
+      URLEncoder.encode(k, "UTF-8") + "=" + URLEncoder.encode(v, "UTF-8")
+    }.mkString("&").getBytes("UTF-8"))
+    val conn = HttpTransport.send(method, url, headers.toSeq, body,
+      followRedirects = false)
     val status = conn.getResponseCode
     // HttpURLConnection stores repeated header values in REVERSE
     // receipt order — undo that so comma-joined Set-Cookie matches
@@ -164,10 +176,8 @@ object UrlConnectionHttpClient extends SessionBootstrap.HttpClient {
       case (k, vs) if k != null => k -> vs.asScala.toSeq.reverse.mkString(",")
     }.toMap
     val stream = if (status >= 400) conn.getErrorStream else conn.getInputStream
-    val body = if (stream == null) ""
-      else try scala.io.Source.fromInputStream(stream, "UTF-8").mkString
-      finally stream.close()
-    SessionBootstrap.HttpResponse(status, respHeaders, body)
+    SessionBootstrap.HttpResponse(status, respHeaders,
+      if (stream == null) "" else HttpTransport.readText(stream))
   }
 
   override def get(url: String,

@@ -1220,7 +1220,7 @@ object Streams {
         srcDirs.map(graft.sinks.Layout.sourceBytes(spark, _)).sum
       if (bytes <= 0L) None
       else {
-        val sess = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+        val sess = graft.Session.shufflePartitions(spark)
         val per = 32L << 20
         val sized = math.max(4L, (bytes + per - 1) / per)
         Some(math.min(sess.toLong, sized).toInt)
@@ -1259,17 +1259,17 @@ object Streams {
   }
 
   /** NOTE (ADVICE r10, documented assumption): the partition override
-    * below mutates the session-global `spark.sql.shuffle.partitions`
-    * for the drain's duration and restores it in the finally — a
-    * query running CONCURRENTLY on the same SparkSession would pick
-    * up the stream's partition count. Every declared entry point
-    * (Bench, Verify, the specs) runs queries sequentially on one
-    * session, which is the contract this code declares; a deployment
-    * that multiplexes concurrent jobs must give each drain its own
-    * `spark.newSession()` WITH the streams built on that session
-    * (the override is read at query start from the stream's own
-    * session, so cloning here — after the caller already built the
-    * stream on the shared session — would not isolate anything).
+    * below is scoped by [[graft.Session.withConf]] to the drain but is
+    * session-global while it lasts — a query running CONCURRENTLY on
+    * the same SparkSession would pick up the stream's partition count.
+    * Every declared entry point (Bench, Verify, the specs) runs
+    * queries sequentially on one session, which is the contract this
+    * code declares; a deployment that multiplexes concurrent jobs
+    * must give each drain its own `spark.newSession()` WITH the
+    * streams built on that session (the override is read at query
+    * start from the stream's own session, so cloning here — after the
+    * caller already built the stream on the shared session — would
+    * not isolate anything).
     */
   private[graft] def drainWithEvidence[T](spark: SparkSession,
     stream: Dataset[T], mode: OutputMode, tag: String,
@@ -1281,7 +1281,6 @@ object Streams {
     // pins it, so this is exactly the per-job state-partition choice
     // a production deployment makes
     val partsOverride = streamShuffleParts(spark, srcDirs)
-    val sessParts = spark.conf.get("spark.sql.shuffle.partitions", "32")
     val ck = scratchTempDir(s"ck_$tag")
     // Emissions land in a temp PARQUET dir via foreachBatch (which
     // accepts every output mode), NOT a memory sink: the memory sink
@@ -1299,25 +1298,20 @@ object Streams {
     // re-emits the WHOLE aggregate each batch, so only the last
     // batch's subdir may be read — the memory sink's skip-committed
     // and truncate semantics, reproduced on files
-    partsOverride.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    val q =
-      try {
-        val started = stream.toDF().writeStream
-          .outputMode(mode)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.write.mode("overwrite")
-              .parquet(s"$land/b${"%09d".format(id)}")
-          }
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-        started
-      } finally {
-        if (partsOverride.isDefined)
-          spark.conf.set("spark.sql.shuffle.partitions", sessParts)
-      }
+    val q = graft.Session.withConf(spark, partsOverride.toSeq.map(n =>
+      "spark.sql.shuffle.partitions" -> n.toString): _*) {
+      val started = stream.toDF().writeStream
+        .outputMode(mode)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          batch.write.mode("overwrite")
+            .parquet(s"$land/b${"%09d".format(id)}")
+        }
+        .option("checkpointLocation", ck.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      started.awaitTermination()
+      started
+    }
     val evidence = q.recentProgress.toSeq
       .filter(p => p.numInputRows > 0 || p.stateOperators.nonEmpty)
       .groupBy(_.batchId).map(_._2.last).toSeq.sortBy(_.batchId)

@@ -1,30 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dump `.explain("formatted")` for declared queries to files —
   * the optimization-round evidence trail (plans/rN/<q>_{before,after}).
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <q1> [q2 ...]
   * Plans are CONSTRUCTED only (no execution), so the dump is cheap;
-  * AQE re-optimized plans are captured separately by ProfileMain when
-  * a claim depends on runtime adaptation.
+  * when a claim depends on runtime adaptation, time the query with
+  * SpotBench and read the AQE final plan from its run instead.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val qs = args.drop(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.getOrCreate()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     qs.foreach { q =>

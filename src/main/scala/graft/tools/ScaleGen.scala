@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: replicates the driver's sf0.1
@@ -36,7 +36,8 @@ import org.apache.spark.sql.functions._
   *    windows, but 1 in 4 of the 3-GRAM windows then carried no salt
   *    and collided across ALL replicas: measured shingle max-df grew
   *    25 → 123 → 1113 across sf0.1/sf1.0/sf10 and candidate pairs
-  *    65× per decade instead of 10×. NgramDiag is the detector.)
+  *    65× per decade instead of 10×; the per-decade shingle max-df
+  *    is the detector.)
   *  - **Embeddings get a per-replica orthogonal transform** (sign
   *    flip of a deterministic coordinate subset): inner products and
   *    norms WITHIN a replica are exactly preserved (same top-k
@@ -59,15 +60,7 @@ object ScaleGen {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "testdata_sf1.0"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.getOrCreate()
 
     def t(name: String): DataFrame = graft.Tables(spark, srcDir, name)
 

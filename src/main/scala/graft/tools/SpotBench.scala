@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev spot-bench: time a named subset of declared queries at an
   * arbitrary SF dir (args: sfDir, then query names; min of 2 runs
   * each, same noop-write meter as Bench). Used for the sf10
@@ -14,43 +12,23 @@ import org.apache.spark.sql.SparkSession
   * shingle table) is tens of GB, and letting the whole dedup family's
   * caches pile up in one heap measures GC pressure, not the queries
   * (the 96g-heap sf10 first attempt died to the kernel OOM killer
-  * exactly this way). Env knobs: SPARK_GRAFT_SHUFFLE overrides the
-  * initial shuffle-partition count (default = cpus; at 10×-bench scale
-  * 32 partitions leave ~everything in one spilling partition-set — a
-  * real deployment sizes this up and lets AQE coalesce), and
-  * SPARK_GRAFT_LOCAL_DIR moves scratch off tmpfs (tmpfs spill is
-  * still RAM — at probe scale that *adds* memory pressure instead of
-  * relieving it).
+  * exactly this way). Engine settings come from [[graft.Session]];
+  * a probe overrides them with Spark's own knobs, e.g.
+  * `-Dspark.sql.shuffle.partitions=256` (at 10×-bench scale
+  * cpus-many partitions leave ~everything in one spilling
+  * partition-set — a real deployment sizes this up and lets AQE
+  * coalesce), `-Dspark.graft.cache.mode=none` (the recompute posture
+  * for intermediates that exceed RAM+scratch, see graft.Caches) and
+  * `SPARK_LOCAL_DIRS` to move scratch off tmpfs (tmpfs spill is still
+  * RAM — at probe scale that *adds* memory pressure instead of
+  * relieving it). `SPARK_GRAFT_SPOT_RUNS=5` plus PlanDump is the
+  * single-query profiling loop.
   */
 object SpotBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val queries = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark")
-    // SPARK_GRAFT_CACHE_MODE → graft.Caches.modeKey: `none` is the
-    // fifth-decade probe posture (the exploded shingle table exceeds
-    // RAM+scratch at sf100; recompute keeps memory flat)
-    val cacheMode = sys.env.getOrElse("SPARK_GRAFT_CACHE_MODE", "persist")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — probe-only conf overrides
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(';').filter(_.contains('=')).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val spark = extra.foldLeft(SparkSession.builder()) {
-      case (b, (k, v)) => b.config(k, v)
-    }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config(graft.Caches.modeKey, cacheMode)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.getOrCreate()
     // warmup on the smallest fixture
     queries.foreach { q =>
       try graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")

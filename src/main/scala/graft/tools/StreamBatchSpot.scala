@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.Streams
 
@@ -16,8 +15,8 @@ import graft.streaming.Streams
   * just at spec scale, with the state bound observable per batch.
   *
   * Args: sfDir slices filesPerSlice query...
-  * Env: SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_LOCAL_DIR
-  * like SpotBench.
+  * Engine settings and their overrides as for SpotBench
+  * ([[graft.Session]]).
   */
 object StreamBatchSpot {
   def main(args: Array[String]): Unit = {
@@ -25,20 +24,8 @@ object StreamBatchSpot {
     val slices = args(1).toInt
     val filesPerSlice = args(2).toInt
     val queries = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.getOrCreate(
+      "spark.driver.maxResultSize" -> "4g")
     val landing = java.nio.file.Files
       .createTempDirectory("graft_slices").toString
     val staged = Streams.sliceEventsByTime(

@@ -86,6 +86,25 @@ class GraphSpec extends AnyFunSuite {
     Caches.releaseAll()
   }
 
+  test("q_pagerank_conv's loop-scoped partition override restores the " +
+    "exact prior conf: a set key keeps its value, an unset key stays unset") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    // build the memoized edge substrate under the session's own
+    // partition count, so the unset run below cannot size it
+    GraphOps.coEdgesEnc(spark, TestSpark.sf0001)
+    GraphOps.q_pagerank_conv(spark, TestSpark.sf0001).collect()
+    assert(spark.conf.get(key) == prior)
+    spark.conf.unset(key)
+    try {
+      assert(spark.conf.getAll.get(key).isEmpty, "precondition: key unset")
+      GraphOps.q_pagerank_conv(spark, TestSpark.sf0001).collect()
+      val after = spark.conf.getAll.get(key)
+      assert(after.isEmpty, s"unset key pinned to $after")
+    } finally spark.conf.set(key, prior)
+    Caches.releaseAll()
+  }
+
   test("triangleCounts: K4 + pendant + isolated edge, exact counts") {
     import spark.implicits._
     // K4 on {1,2,3,4} (4 triangles, every node in 3), pendant 5 off

@@ -4,21 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared session for the whole test run (SURVEY §5 — one
   * SparkSession per suite via lazy singleton; suites share it since
-  * Spark sessions are heavyweight).
+  * Spark sessions are heavyweight). Built by the same [[Session]]
+  * factory as every main, so the specs run the engine config the
+  * bench and the oracle dump run.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.getOrCreate()
   val sf0001 = "/root/testdata/sf0.001"
 }

@@ -512,4 +512,52 @@ class VectorOpsSpec extends AnyFunSuite {
       f"worst |sampled-exact|/SE = $worst%.2f exceeds the 6-sigma envelope")
     graft.Caches.releaseAll()
   }
+
+  test("covCellsOf: every one of the 2080 cells equals a driver-side " +
+    "BigDecimal reference on hand-made 64-d vectors; a ragged vector " +
+    "fails the query instead of mislabeling cells") {
+    val d = VectorOps.vecDim
+    val rnd = new scala.util.Random(11)
+    // mixed signs and magnitudes, plus exact zeros and repeated values
+    val vecs = Seq.tabulate(5) { v =>
+      Array.tabulate(d) { k =>
+        if ((v + k) % 13 == 0) 0.0f
+        else ((rnd.nextFloat() - 0.5f) * math.pow(10, v % 3 - 1)).toFloat
+      }
+    }
+    // Spark's rules: float -> DOUBLE -> DECIMAL(20,8) rounds HALF_UP
+    // from the double's shortest decimal form; a DECIMAL(20,8) product
+    // is typed DECIMAL(38,13) (precision 41 overflows 38, so the scale
+    // gives way down to 38 - 25 integer digits), then widened to
+    // DECIMAL(38,16); sums are exact
+    def dec(f: Float) = BigDecimal(f.toDouble)
+      .setScale(8, BigDecimal.RoundingMode.HALF_UP)
+    def prod(a: BigDecimal, b: BigDecimal) =
+      (a * b).setScale(13, BigDecimal.RoundingMode.HALF_UP)
+    val dv = vecs.map(_.map(dec))
+    val sum = (0 until d).map(i => dv.map(_(i)).sum)
+    val want = (for (i <- 0 until d; j <- i until d) yield
+      (i.toLong, j.toLong) ->
+        (dv.map(x => prod(x(i), x(j))).sum, vecs.size.toLong, sum(i), sum(j))
+    ).toMap
+    val got = VectorOps.covCellsOf(vecs.zipWithIndex
+      .map { case (x, k) => (k.toLong, x) }.toDF("vec_id", "embedding"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        (BigDecimal(r.getDecimal(2)), r.getLong(3),
+          BigDecimal(r.getDecimal(4)), BigDecimal(r.getDecimal(5))))
+      .toMap
+    assert(got.size == d * (d + 1) / 2)
+    assert(got.keySet == want.keySet)
+    val bad = want.collect { case (k, w) if got(k) != w => (k, got(k), w) }
+    assert(bad.isEmpty, s"${bad.size} cells differ, e.g. ${bad.take(3)}")
+
+    val ragged = (vecs :+ vecs.head.take(d - 1)).zipWithIndex
+      .map { case (x, k) => (k.toLong, x) }.toDF("vec_id", "embedding")
+    val e = intercept[Exception](VectorOps.covCellsOf(ragged).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains(s"embedding of size ${d - 1}")),
+      s"ragged vector did not fail loudly: $e")
+  }
 }
