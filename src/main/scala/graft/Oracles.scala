@@ -2291,13 +2291,13 @@ object Oracles {
     },
 
     // embedding covariance matrix (VectorOps.q_vec_cov): identical
-    // float → DOUBLE → DECIMAL(20,8) element casts, exact
+    // float → DOUBLE → DECIMAL(18,8) element casts, exact
     // DECIMAL(38,16) product sums, one double division; + 0.0
     // canonicalizes −0.0 on both sides
     "q_vec_cov" -> {
       val d = graft.operators.VectorOps.vecDim
       s"""WITH x AS (SELECT vec_id, i,
-         |    CAST(CAST(embedding[i + 1] AS DOUBLE) AS DECIMAL(20,8)) AS v
+         |    CAST(CAST(embedding[i + 1] AS DOUBLE) AS DECIMAL(18,8)) AS v
          |  FROM embeddings CROSS JOIN (SELECT unnest(range($d)) AS i)),
          |cells AS (SELECT a.i AS i, b.i AS j,
          |    sum(CAST(a.v * b.v AS DECIMAL(38,16))) AS spp,
@@ -2323,7 +2323,7 @@ object Oracles {
       s"""WITH e AS (SELECT * FROM embeddings
          |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '$lt'),
          |x AS (SELECT vec_id, i,
-         |    CAST(CAST(embedding[i + 1] AS DOUBLE) AS DECIMAL(20,8)) AS v
+         |    CAST(CAST(embedding[i + 1] AS DOUBLE) AS DECIMAL(18,8)) AS v
          |  FROM e CROSS JOIN (SELECT unnest(range($d)) AS i)),
          |cells AS (SELECT a.i AS i, b.i AS j,
          |    sum(CAST(a.v * b.v AS DECIMAL(38,16))) AS spp,

@@ -67,7 +67,7 @@ object Scalars {
     * per key.
     */
   /** The four scrape markers in the reference's replace order
-    * (single source of truth — HtmlInputs' tag parser strips the
+    * (single source of truth — the FormInputs tag parser strips the
     * same set, without the trim; the q_regex_clean oracle chains the
     * same four literals).
     */

@@ -798,13 +798,13 @@ object VectorOps {
     * products per vector MAP-SIDE (no self-join — the pair structure
     * is within each row's own array), then a partial-combining
     * aggregate leaves ≤ 2080 cells per mapper on the shuffle. Element
-    * values go through the proven float → DOUBLE → DECIMAL(20,8)
-    * cast (the labelCentroids discipline), sums are exact. Products
-    * are NOT quite exact: Spark types a DECIMAL(20,8) product
-    * DECIMAL(38,13) (precision 41 overflows 38), so each rounds
-    * HALF_UP to 13 places before the DECIMAL(38,16) cast, where the
-    * DuckDB twin keeps all 16 — a ≤ n·5e-14 gap in a cell's sum that
-    * the 6-place rounding of the final cov absorbs.
+    * values go through the float → DOUBLE → DECIMAL(18,8) cast (the
+    * labelCentroids rounding at a width that keeps products exact):
+    * a DECIMAL(18,8) product is DECIMAL(37,16), so every product and
+    * sum is exact in Spark and in the DuckDB twin alike. (At
+    * DECIMAL(20,8) Spark typed the product DECIMAL(38,13) — precision
+    * 41 overflows 38 — and rounded each product to 13 places where
+    * DuckDB kept 16.) Elements must stay below 1e10 in magnitude.
     */
   private[graft] def covCells(s: SparkSession, dir: String): DataFrame =
     graft.Caches.cached(covCellsOf(t(s, dir, "embeddings")))
@@ -841,7 +841,7 @@ object VectorOps {
       .select(expr(s"i * $d - i * (i - 1) div 2 + j - i").as("pos"),
         col("i"), col("j"))
     val prods = checked.select(expr(
-      "transform(embedding, v -> CAST(CAST(v AS DOUBLE) AS DECIMAL(20,8)))")
+      "transform(embedding, v -> CAST(CAST(v AS DOUBLE) AS DECIMAL(18,8)))")
       .as("d"))
       .select(posexplode(expr(
         """flatten(transform(d, (vi, i) ->
@@ -854,7 +854,7 @@ object VectorOps {
       .select("i", "j", "spp", "n")
     val sums = checked.select(posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy(col("pos").cast("long").as("pos"))
-      .agg(sum(col("x").cast("double").cast("decimal(20,8)")).as("sv"))
+      .agg(sum(col("x").cast("double").cast("decimal(18,8)")).as("sv"))
     // covCells wraps this in the registered shared cache: q_vec_cov
     // and q_vec_pca both consume the 2080-row summary — CacheManager
     // plan-dedup gives the two queries ONE covariance pass per

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{HtmlInputs, Scalars}
+import graft.functions.{FormInputs, Scalars}
 
 /** The reference's three entry-point pipelines (SURVEY §3, E1–E3) as
   * one declarative DataFrame program: what took the reference a
@@ -25,9 +25,8 @@ object ExclusionPipeline {
     * _read_page_inputs transform (clients/exclusion_requests.py:153-165)
     * end-to-end on page HTML. Input: one row per fetched page with
     * (idCol, pageCol = HTML text, urlCol). Per page:
-    *   parse input/textarea tags → (key, value) pairs
-    *     (HtmlInputs.pageInputPairs, :156-157)
-    *   → drop empty values (:158)
+    *   parse input/textarea tags → (key, value) pairs, empty values
+    *     dropped ([[FormInputs]], :156-158)
     *   → dict build: the LAST occurrence of a key wins (:159)
     *   → add the URL entry (:160, overwriting any scraped 'URL' key
     *     like dict assignment does)
@@ -38,38 +37,23 @@ object ExclusionPipeline {
     * an engine drops the unparseable page instead of fabricating a
     * URL-only document for it.
     * Output feeds [[detailsToDocuments]]. Fully distributed: parsing
-    * is per-row expressions; the only shuffle is the per-(id,key)
-    * last-wins window.
+    * is one kernel call per page and branch; the only shuffle is the
+    * per-(id,key) last-wins aggregate.
     */
   def parsePages(pages: DataFrame, idCol: String = "id",
     pageCol: String = "page", urlCol: String = "url"): DataFrame = {
-    // ONE scan, raw tags exploded, parse as top-level projections:
-    // the form span and both tag arrays are computed once per page
-    // (firstForm is an instr/substr scan, not a reluctant regex), and
-    // keyOf/value run codegen'd on the exploded tag rows instead of
-    // inside a transform() lambda (interpreted CodegenFallback) —
-    // r5 stage timing: the old shape spent 1.8 s/pass on the form
-    // regex and 2.4 s on the interpreted per-tag parse at sf1.0.
-    // Semantics identical: `ord` is the global inputs-then-textareas
-    // position (what posexplode over the concatenated pair array
-    // produced) while each list keeps its OWN 0-based index for the
-    // Untitled<idx> key fallback.
-    val tagged = pages
-      .select(col(idCol).as("id"), col(urlCol).as("url"),
-        size(HtmlInputs.inputTags(HtmlInputs.firstForm(col(pageCol))))
-          .as("__n_inputs"),
-        posexplode(concat(
-          HtmlInputs.inputTags(HtmlInputs.firstForm(col(pageCol))),
-          HtmlInputs.textareaTags(HtmlInputs.firstForm(col(pageCol))))))
-    val isInput = col("pos") < col("__n_inputs")
-    val listIdx = when(isInput, col("pos"))
-      .otherwise(col("pos") - col("__n_inputs"))
-    val pairs = tagged
-      .select(col("id"), col("url"), col("pos").as("ord"),
-        HtmlInputs.keyOf(col("col"), listIdx).as("key"),
-        when(isInput, HtmlInputs.inputValue(col("col")))
-          .otherwise(HtmlInputs.textareaValue(col("col"))).as("value"))
-      .filter(length(col("value")) > 0)
+    // The generator runs straight on the kernel, never on an alias of
+    // it: Catalyst infers `isnotnull(x) AND size(x) > 0` for a
+    // generator over an attribute x and pushes that Filter through
+    // the projection by substituting x's definition, so an aliased
+    // parse is evaluated again in the Filter. The previous
+    // Column-expression parse ("codegen'd top-level projections")
+    // lost most of its time there: its whole-form regex and lower()
+    // copies re-ran per exploded tag row, 1.1 s of a 3.1 s etl_load
+    // load. Here the kernel runs once per page in each union branch
+    // (PlanSpec guards it).
+    val pairs = pages
+      .select(col(idCol).as("id"), inline(FormInputs(col(pageCol))))
     // last-wins as a partial-combining aggregate, not a window: ord is
     // the page-global tag position — UNIQUE within (id, key) — so
     // max_by(value, ord) picks exactly the row the old
@@ -82,12 +66,12 @@ object ExclusionPipeline {
       .agg(max_by(col("value"), col("ord")).as("value"))
       .filter(col("key") =!= "__RequestVerificationToken" &&
         col("key") =!= "URL")
-    // URL rows gate on the SAME extraction the pair parse uses (a full
-    // <form>…</form> span) — an rlike("<form") here would fabricate a
+    // URL rows gate on the SAME parse (non-null = a complete first
+    // <form>…</form>) — an rlike("<form") here would fabricate a
     // URL-only row for a page whose truncated/unclosed form yields no
     // pairs, contradicting "no parseable form ⇒ NO rows"
     val urlRows = pages
-      .filter(length(HtmlInputs.firstForm(col(pageCol))) > 0)
+      .filter(FormInputs(col(pageCol)).isNotNull)
       .select(col(idCol).as("id"), lit("URL").as("key"),
         col(urlCol).as("value"))
     deduped.unionByName(urlRows)
@@ -96,7 +80,7 @@ object ExclusionPipeline {
   /** Detail rows as scraped: one row per parsed `<input>` tag
     * (id, title, name, idx, value) — the _parse_input_tag shape
     * (clients/exclusion_requests.py:39-54), with the reference's EXACT
-    * semantics (matching the parsePages/HtmlInputs path):
+    * semantics (matching the parsePages/FormInputs path):
     *  - key: title → name → Untitled<idx> with Python truthiness ("" is
     *    falsy, " " is truthy) and NO trim — the reference never strips
     *    keys (:40-48); markers removed anywhere (:45-48);
@@ -219,11 +203,12 @@ object ExclusionPipeline {
     // BY's range-bounds sampling re-executed the parse chain. Under
     // AQE the sort is a separate query stage whose sampling reads the
     // MATERIALIZED shuffle of the dedup stage inside parsePages, not
-    // the raw parse — only the cheap URL branch (one firstForm scan)
-    // re-runs. Dropping the cache removes a full per-pass
+    // the raw parse — only the cheap URL branch (one FormInputs call
+    // per page) re-runs. Dropping the cache removes a full per-pass
     // materialization (r11, 32 cores: 3.2–4.6 s cached-cold before,
-    // value-identical after; uncached it runs 3.1 s at sf0.1 on 4
-    // cores, SpotBench min of 5).
+    // value-identical after). With the FormInputs kernel it runs
+    // 0.67 s at sf0.1 on 4 cores (SpotBench min of 5; 4.63 s with the
+    // previous Column-expression parse, same host and session).
     parsePages(pages)
       .select(col("id").cast("long").as("doc_id"), col("key"), col("value"))
       .orderBy("doc_id", "key")

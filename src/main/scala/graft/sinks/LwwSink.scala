@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.ExclusionPipeline
@@ -28,7 +29,14 @@ object LwwSink {
     */
   def merge(spark: SparkSession, batch: DataFrame, path: String, key: String,
     ts: String, tieBreak: String, partition: Option[String] = None): Unit = {
-    val exists = new java.io.File(path).exists()
+    // Hadoop FileSystem, not java.io.File: a `file:`, `hdfs://` or
+    // `s3a://` path must see its state (java.io.File reads a URI as a
+    // relative file name that never exists, and a merge then replaced
+    // the touched partitions with the batch alone). One metadata call
+    // per merge: this check is on every load's write path.
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(target)
     val unioned =
       if (!exists) batch
       else {
@@ -53,17 +61,11 @@ object LwwSink {
           .parquet(path)
       case None =>
         // full-state swap via staging dir (small keyed states)
-        val tmp = path + ".staging"
-        merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-        val fs = new java.io.File(path)
-        if (fs.exists()) delete(fs)
-        if (!new java.io.File(tmp).renameTo(fs))
+        val tmp = new Path(path + ".staging")
+        merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        if (exists) fs.delete(target, true)
+        if (!fs.rename(tmp, target))
           sys.error(s"atomic swap failed: $tmp -> $path")
     }
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(delete))
-    f.delete(): Unit
   }
 }

@@ -158,4 +158,65 @@ class ExclusionPipelineSpec extends AnyFunSuite {
     val fields = docs(0).getAs[Map[String, String]]("fields")
     assert(fields("Product") == "steel pipe" && fields("URL") == "u1")
   }
+
+  // ── FormInputs grammar, row for row ───────────────────────────────
+
+  private def rowsOf(pages: Seq[(String, String)]): Set[(String, String, String)] =
+    ExclusionPipeline.parsePages(pages.map { case (id, p) => (id, p, s"U-$id") }
+      .toDF("id", "page", "url"))
+      .as[(String, String, String)].collect().toSet
+
+  test("parsePages: non-ASCII text before the form keeps every pair " +
+    "(the form span is found on the page itself, not on lower(page))") {
+    // lower('İ') is two characters; positions found in the lowered
+    // page would cut the original page eight characters late
+    val page = "İ" * 8 + "<html><form><input title=\"K\" value=\"v\"/>" +
+      "<textarea name=\"T\">t</textarea></form></html>"
+    assert(rowsOf(Seq("1" -> page)) ==
+      Set(("1", "K", "v"), ("1", "T", "t"), ("1", "URL", "U-1")))
+  }
+
+  test("parsePages: hand-checked rows for case, quoting, fallbacks, " +
+    "entities, textareas and form boundaries") {
+    val pages = Seq(
+      "upper" -> ("<HTML><FORM ACTION=\"/x\"><INPUT TITLE=\"Upper\" VALUE=\"U1\"/>" +
+        "<Input Name=\"Mixed\" Value='m'/><TEXTAREA NAME=\"Big\">  body  </TEXTAREA>" +
+        "</FORM></HTML>"),
+      "quote" -> ("<form><input title='Single' value='sv'/>" +
+        "<input name='OnlyName' value=' x '/><input title=\"Mix\" value='it\"s'/></form>"),
+      "fallback" -> ("<form><input title=\"\" name=\"BIS232Request.Fallback\" value=\"f\"/>" +
+        "<input title=\"\" name=\"\" value=\"g\"/><input title=' ' value=\"h\"/></form>"),
+      "entity" -> ("<form><input title=\"A &amp; B &lt;c&gt;\" " +
+        "value=\"&quot;q&quot; &#39;s&#39; &amp;lt;\"/>" +
+        "<textarea name=\"T&amp;A\">x &gt; y</textarea></form>"),
+      "area" -> ("<form><input value=\"i0\"/>" +
+        "<textarea name=\"Multi\">\n  line one\n  line two\n</textarea>" +
+        "<textarea name=\"Empty\"></textarea><textarea name=\"Blank\">\n\t </textarea>" +
+        "<textarea>anon</textarea></form>"),
+      "unclosed" -> "<form><input title=\"Lost\" value=\"v\"/>",
+      "nested" -> ("<form><input title=\"A\" value=\"1\"/>" +
+        "<form><input title=\"B\" value=\"2\"/></form>"),
+      "second" -> ("<form><input title=\"First\" value=\"1\"/></form>" +
+        "<form><input title=\"Second\" value=\"2\"/></form>"),
+      "null" -> null,
+      "noform" -> "<html><body><input title=\"Outside\" value=\"o\"/></body></html>")
+    val want = Set(
+      ("upper", "Upper", "U1"), ("upper", "Mixed", "m"), ("upper", "Big", "body"),
+      ("quote", "Single", "sv"), ("quote", "OnlyName", "x"), ("quote", "Mix", "it\"s"),
+      // title="" is falsy (→ name, → Untitled<idx>); title=" " is not,
+      // and keys are never trimmed
+      ("fallback", "Fallback", "f"), ("fallback", "Untitled1", "g"),
+      ("fallback", " ", "h"),
+      ("entity", "A & B <c>", "\"q\" 's' &lt;"), ("entity", "T&A", "x > y"),
+      // textareas count from 0 in their own list; an empty body is
+      // str(None), a whitespace-only one strips to "" and is dropped
+      ("area", "Untitled0", "i0"), ("area", "Multi", "line one\n  line two"),
+      ("area", "Empty", "None"), ("area", "Untitled3", "anon"),
+      // first <form up to the NEAREST </form>: the inner form's tags count
+      ("nested", "A", "1"), ("nested", "B", "2"),
+      ("second", "First", "1"))
+    val urls = Seq("upper", "quote", "fallback", "entity", "area", "nested", "second")
+      .map(id => (id, "URL", s"U-$id"))
+    assert(rowsOf(pages) == want ++ urls)
+  }
 }

@@ -165,14 +165,46 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"),
       "last-wins dedup regressed into a window sort:\n" + p.take(2000))
     assert(p.contains("max_by") || p.contains("maxby"), p.take(2000))
-    // the parse runs on exploded tag rows (Generate over the tag
-    // arrays), not inside an interpreted array-transform: a
-    // transform() lambda over the pair structs would print as
-    // "transform(" in the projection
+    // the pairs are generated from the codegen'd FormInputs kernel
+    // (Generate over its array), not built inside an interpreted
+    // array-transform: a transform() lambda over the pair structs
+    // would print as "transform(" in the projection
     assert(p.contains("Generate"), p.take(2000))
     assert(!p.contains("transform("),
       "tag parse regressed into an interpreted transform() lambda:\n" +
         p.take(2000))
+  }
+
+  test("parsePages evaluates the FormInputs kernel in exactly one node " +
+    "per union branch, with no regex or lower() left in the plan") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Lower,
+      RegExpExtract, RegExpExtractAll}
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // a non-local source, so the optimizer cannot fold the parse away
+    val pages = spark.range(4).select(col("id").cast("string").as("id"),
+      concat(lit("<form><input title=\"k\" value=\""), col("id"),
+        lit("\"/></form>")).as("page"),
+      concat(lit("u"), col("id")).as("url"))
+    val plan = graft.pipeline.ExclusionPipeline.parsePages(pages)
+      .queryExecution.optimizedPlan
+    def uses(n: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
+      p: Expression => Boolean) = n.expressions.exists(_.exists(p))
+    val banned = plan.collect { case n if uses(n) {
+      case _: RegExpExtract | _: RegExpExtractAll | _: Lower => true
+      case _ => false
+    } => n }
+    assert(banned.isEmpty, s"per-tag regex/lower() in the plan:\n$plan")
+    val branches = plan.collect { case u: Union => u.children }.flatten
+    assert(branches.size == 2, plan.toString)
+    for (b <- branches) {
+      val kernels = b.collect {
+        case n if uses(n)(_.isInstanceOf[graft.functions.FormInputs]) => n.nodeName
+      }
+      assert(kernels.size == 1,
+        s"FormInputs evaluated in ${kernels.mkString(", ")}:\n$plan")
+    }
+    assert(graft.pipeline.ExclusionPipeline.parsePages(pages).count() == 8)
   }
 
   test("q_join_range is a bucketed equi-join, not a nested loop") {

@@ -525,15 +525,12 @@ class VectorOpsSpec extends AnyFunSuite {
         else ((rnd.nextFloat() - 0.5f) * math.pow(10, v % 3 - 1)).toFloat
       }
     }
-    // Spark's rules: float -> DOUBLE -> DECIMAL(20,8) rounds HALF_UP
-    // from the double's shortest decimal form; a DECIMAL(20,8) product
-    // is typed DECIMAL(38,13) (precision 41 overflows 38, so the scale
-    // gives way down to 38 - 25 integer digits), then widened to
-    // DECIMAL(38,16); sums are exact
+    // Spark's rules: float -> DOUBLE -> DECIMAL(18,8) rounds HALF_UP
+    // from the double's shortest decimal form; a DECIMAL(18,8) product
+    // is DECIMAL(37,16), so products and sums are exact
     def dec(f: Float) = BigDecimal(f.toDouble)
       .setScale(8, BigDecimal.RoundingMode.HALF_UP)
-    def prod(a: BigDecimal, b: BigDecimal) =
-      (a * b).setScale(13, BigDecimal.RoundingMode.HALF_UP)
+    def prod(a: BigDecimal, b: BigDecimal) = a * b
     val dv = vecs.map(_.map(dec))
     val sum = (0 until d).map(i => dv.map(_(i)).sum)
     val want = (for (i <- 0 until d; j <- i until d) yield
