@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.Scalars
+import graft.sinks.LwwSink
 
 /** Core relational operator surface (SURVEY §2.1–§2.10, declared
   * queries). Each def is one `SparkEntry.queries` contract key.
@@ -2339,23 +2340,21 @@ object Relational {
     * insert (new key), update (existing key, new last event), delete
     * (the feed's last event is the modeled `error` tombstone), carry
     * (key untouched by the feed). Both halves reduce to one row per
-    * user via the same rank over (ts DESC, event_id DESC) — the LWW
-    * discipline of q_window_dedup_lww — and the merge itself is ONE
-    * full-outer join on the user key with exact count/checksum
-    * aggregates, the shape a table-format MERGE executes at scale.
+    * user through the engine's LWW reduce, [[LwwSink.reduce]] over
+    * (ts, event_id) — the order q_window_dedup_lww declares — and the
+    * merge itself is ONE full-outer join on the user key with exact
+    * count/checksum aggregates, the shape a table-format MERGE
+    * executes at scale.
     */
   def q_cdc_merge(s: SparkSession, dir: String): DataFrame = {
     val cutoff = lit("2024-01-16 00:00:00").cast("timestamp")
-    def lww(df: DataFrame, et: String, ts: String): DataFrame = {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      df.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("event_type").as(et), col("ts").as(ts))
-    }
     val ev = t(s, dir, "events")
-    val snap = lww(ev.filter(col("ts") < cutoff), "snap_et", "snap_ts")
-    val delta = lww(ev.filter(col("ts") >= cutoff), "delta_et", "delta_ts")
+    val snap = LwwSink.reduce(ev.filter(col("ts") < cutoff),
+      "user_id", col("ts"), col("event_id"))
+      .select(col("user_id"), col("event_type").as("snap_et"))
+    val delta = LwwSink.reduce(ev.filter(col("ts") >= cutoff),
+      "user_id", col("ts"), col("event_id"))
+      .select(col("user_id"), col("event_type").as("delta_et"))
     snap.join(delta, Seq("user_id"), "full_outer")
       .select(col("user_id"),
         when(col("delta_et").isNull, lit("carry"))

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{FormInputs, Scalars}
+import graft.sinks.LwwSink
 
 /** The reference's three entry-point pipelines (SURVEY §3, E1–E3) as
   * one declarative DataFrame program: what took the reference a
@@ -54,16 +54,7 @@ object ExclusionPipeline {
     // (PlanSpec guards it).
     val pairs = pages
       .select(col(idCol).as("id"), inline(FormInputs(col(pageCol))))
-    // last-wins as a partial-combining aggregate, not a window: ord is
-    // the page-global tag position — UNIQUE within (id, key) — so
-    // max_by(value, ord) picks exactly the row the old
-    // row_number()-over-(ord DESC) window kept, deterministically,
-    // while aggregating map-side before the exchange (the lpVote
-    // struct-argmax discipline) instead of sorting every (id, key)
-    // partition after it
-    val deduped = pairs
-      .groupBy("id", "key")
-      .agg(max_by(col("value"), col("ord")).as("value"))
+    val deduped = lastByOrd(pairs)
       .filter(col("key") =!= "__RequestVerificationToken" &&
         col("key") =!= "URL")
     // URL rows gate on the SAME parse (non-null = a complete first
@@ -106,27 +97,33 @@ object ExclusionPipeline {
 
   /** Pivot normalized key/value detail rows into one document row per
     * id with an open-shape map column (SURVEY §1: fixed StructType up
-    * front, dynamic tail in MapType). Duplicate keys are resolved
-    * LAST-occurrence-wins by `ord` BEFORE the map build — the
-    * reference's dict assignment (:159), and a hard requirement here:
-    * map_from_entries THROWS on duplicate keys under Spark's default
-    * mapKeyDedupPolicy=EXCEPTION, and collect_list order after a
-    * shuffle would make any other resolution nondeterministic.
-    * (Input without an `ord` column — e.g. parsePages output, already
-    * per-(id,key) deduped — gets a constant ord.)
+    * front, dynamic tail in MapType). Input with an `ord` column
+    * ([[normalizeDetails]]) first resolves duplicate keys through
+    * [[lastByOrd]], the step [[parsePages]] already applied to its own
+    * output; input without `ord` must be unique per (id, key), since
+    * map_from_entries THROWS on a duplicate key under Spark's default
+    * mapKeyDedupPolicy=EXCEPTION.
     */
   def detailsToDocuments(normalized: DataFrame): DataFrame = {
-    val withOrd =
-      if (normalized.columns.contains("ord")) normalized
-      else normalized.withColumn("ord", lit(0L))
-    val lastWins = Window.partitionBy("id", "key").orderBy(col("ord").desc)
-    withOrd
-      .withColumn("__rn", row_number().over(lastWins))
-      .filter(col("__rn") === 1)
+    val pairs =
+      if (normalized.columns.contains("ord")) lastByOrd(normalized)
+      else normalized
+    // entries in key order: collect_list keeps the shuffle's arrival
+    // order, so an unsorted map (its KV item string, its parquet
+    // bytes) would vary with partitioning
+    pairs
       .groupBy("id")
-      .agg(map_from_entries(collect_list(struct(col("key"), col("value"))))
-        .as("fields"))
+      .agg(map_from_entries(sort_array(
+        collect_list(struct(col("key"), col("value"))))).as("fields"))
   }
+
+  /** The dict build's last-occurrence-wins (:159): per (id, key), the
+    * value at the largest `ord` (the tag position, UNIQUE within
+    * (id, key)) — a partial-combining aggregate, so it reduces
+    * map-side before the exchange instead of sorting after it.
+    */
+  private def lastByOrd(pairs: DataFrame): DataFrame =
+    pairs.groupBy("id", "key").agg(max_by(col("value"), col("ord")).as("value"))
 
   /** Merge summaries over detail documents: the reference assigns
     * summary values AFTER parsing the page, so summary wins on key
@@ -165,16 +162,6 @@ object ExclusionPipeline {
       d.withColumn(c, Scalars.typifyLong(col(c))))
     doubleCols.foldLeft(l)((d, c) =>
       d.withColumn(c, Scalars.typifyNumber(col(c))))
-  }
-
-  /** Last-write-wins upsert semantics of the DynamoDB PUT sink
-    * (__main__.py:11-23): of N versions of an id, the latest
-    * `scrape_ts` (tie-break: highest batch position) survives.
-    */
-  def lwwByKey(df: DataFrame, key: String, ts: Column, tieBreak: Column): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(ts.desc, tieBreak.desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Declared S2 query: synthesize a detail page per document row
@@ -223,6 +210,9 @@ object ExclusionPipeline {
     val docs = detailsToDocuments(normalizeDetails(rawDetails))
     val merged = mergeSummaries(docs, summaries, summaryCols)
     val typed = typifyColumns(merged, longCols, doubleCols)
-    lwwByKey(typed, "id", col("scrape_ts"), col("scrape_pos"))
+    // last-write-wins upsert semantics of the DynamoDB PUT sink
+    // (__main__.py:11-23): of N versions of an id, the latest
+    // `scrape_ts` (tie-break: highest batch position) survives
+    LwwSink.reduce(typed, "id", col("scrape_ts"), col("scrape_pos"))
   }
 }

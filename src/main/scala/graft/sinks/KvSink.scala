@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import graft.pipeline.ExclusionPipeline
 
 /** Abstract key-value table client — the typed seam for the
   * reference's DynamoDB `batch_write_item` PUT loop
@@ -38,9 +37,10 @@ trait KvClient {
   *
   * KV PUTs are last-write-wins by ARRIVAL, and arrival order across
   * distributed tasks is nondeterministic — so the sink first reduces
-  * the frame to one newest row per key (the same lwwByKey the batch
-  * and streaming parquet sinks use). After the reduce each key is
-  * written exactly once, which also makes re-runs idempotent.
+  * the frame to one newest row per key ([[LwwSink.reduce]], the same
+  * reduce the batch and streaming parquet sinks merge with). After the
+  * reduce each key is written exactly once, which also makes re-runs
+  * idempotent.
   */
 object KvSink {
 
@@ -60,7 +60,7 @@ object KvSink {
     */
   def upsert(df: DataFrame, idField: String, ts: String, tieBreak: String,
     clientFor: KvClientFactory, batchSize: Int = defaultBatchSize): Unit = {
-    val deduped = ExclusionPipeline.lwwByKey(df, idField, col(ts), col(tieBreak))
+    val deduped = LwwSink.reduce(df, idField, col(ts), col(tieBreak))
     val cols = deduped.columns
     deduped.foreachPartition { rows: Iterator[Row] =>
       val client = clientFor()

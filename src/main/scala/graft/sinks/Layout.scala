@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -46,7 +47,7 @@ object Layout {
     */
   def sourceBytes(spark: SparkSession, dir: String): Long =
     try {
-      val p = new org.apache.hadoop.fs.Path(dir)
+      val p = new Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     } catch { case _: Throwable => 0L }
@@ -130,25 +131,19 @@ object Layout {
     * preserving a hive partition layout when `partitionCol` is given
     * (each partition value collapses to one file, bounded by
     * [[maxRecordsPerFile]]). The rewrite stages to a sibling
-    * directory, then swaps via two renames. Readers never see MIXED
-    * old/new data, but on a plain filesystem there is a sub-ms window
-    * between the renames where `path` does not exist — a racing
-    * reader must retry, and a crash inside the window leaves the live
-    * data at `path + ".old"` ([[compact]] restores it on the next
-    * call). True atomicity needs what production storage provides: a
-    * metastore location flip or a table-format rewrite-files commit —
-    * there, compaction also runs per-partition so one job never
-    * rewrites the whole table.
+    * directory and goes live through [[swap]]: readers never see MIXED
+    * old/new data, but one racing the swap may find no `path` and must
+    * retry. True atomicity needs a metastore location flip or a
+    * table-format rewrite-files commit — there, compaction also runs
+    * per-partition so one job never rewrites the whole table.
     */
   def compact(spark: SparkSession, path: String,
     partitionCol: Option[String] = None,
     targetBytes: Long = defaultTargetBytes): CompactionStats = {
-    // crash recovery: a previous swap that died between its renames
-    // left the live data at .old and no target — restore, don't lose
-    val old = Paths.get(path + ".old")
-    if (!Files.exists(Paths.get(path)) && Files.exists(old))
-      Files.move(old, Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    val (before, bytes) = stats(path)
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    openState(fs, target)
+    val (before, bytes) = stats(fs, target)
     val df = spark.read.parquet(path)
     val reshaped = partitionCol match {
       // one task per partition value ⇒ one file per leaf dir
@@ -157,34 +152,49 @@ object Layout {
         val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
         df.repartition(n)
     }
-    val tmp = path + ".compacting"
+    val staging = target.suffix(".compacting")
     val w = reshaped.write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
-    partitionCol.fold(w)(w.partitionBy(_)).parquet(tmp)
-    swap(tmp, path)
-    CompactionStats(before, stats(path)._1, bytes)
+    partitionCol.fold(w)(w.partitionBy(_)).parquet(staging.toString)
+    swap(fs, staging, target, live = true)
+    CompactionStats(before, stats(fs, target)._1, bytes)
   }
 
-  /** (data file count, total data bytes) under `path`. */
-  private def stats(path: String): (Int, Long) = {
-    val walk = Files.walk(Paths.get(path))
-    try {
-      val files = walk.filter(f =>
-        f.getFileName.toString.startsWith("part-")).toArray.toSeq
-        .map(_.asInstanceOf[java.nio.file.Path])
-      (files.size, files.map(Files.size).sum)
-    } finally walk.close()
+  /** (data file count, total data bytes) under `dir`. */
+  private def stats(fs: FileSystem, dir: Path): (Int, Long) = {
+    val it = fs.listFiles(dir, true)
+    val sizes = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.startsWith("part-")).map(_.getLen).toSeq
+    (sizes.size, sizes.sum)
   }
 
-  private def swap(tmp: String, path: String): Unit = {
-    val target = Paths.get(path)
-    val old = Paths.get(path + ".old")
-    deleteRecursively(old)
-    Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-    // only after the new target is live is the old state disposable
-    deleteRecursively(old)
+  /** Whether state exists at `target`, after restoring `<target>.old`
+    * when a [[swap]] died between its renames (a call only when
+    * `target` is missing: opening existing state makes exactly one).
+    */
+  private[sinks] def openState(fs: FileSystem, target: Path): Boolean =
+    fs.exists(target) || {
+      val old = target.suffix(".old")
+      fs.exists(old) && { rename(fs, old, target); true }
+    }
+
+  /** Put `staging` live at `target`: drop a leftover `.old`, move the
+    * `live` state to `.old`, `staging` to `target`, then drop `.old`.
+    * A crash leaves the whole prior state at `target` or at `.old`,
+    * where [[openState]] finds it. Each rename's destination is absent
+    * first: Hadoop's `rename` onto a directory moves the source INTO it.
+    */
+  private[sinks] def swap(fs: FileSystem, staging: Path, target: Path,
+    live: Boolean): Unit = {
+    val old = target.suffix(".old")
+    fs.delete(old, true)
+    if (live) rename(fs, target, old)
+    rename(fs, staging, target)
+    fs.delete(old, true)
   }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) sys.error(s"rename failed: $from -> $to")
 
   /** Shared by the graph substrate and the streaming landing zone —
     * one definition so a future hardening (symlinks, delete races)

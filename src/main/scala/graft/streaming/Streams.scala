@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *    (batch twin: q_time_bucket);
   *  - [[statefulLww]]: per-key last-write-wins via
   *    flatMapGroupsWithState (batch twin: q_window_dedup_lww);
-  *  - [[LwwParquetSink]]: foreachBatch upsert sink reproducing the
-  *    PUT-by-ID semantics over parquet.
+  *  - [[lwwUpsertQuery]]: foreachBatch [[graft.sinks.LwwSink]]
+  *    upsert reproducing the PUT-by-ID semantics over parquet.
   *
   * Scale posture: watermark bounds state; LWW state is one row per
   * key; the foreachBatch sink is the object-store analog of the
@@ -990,61 +990,21 @@ object Streams {
     }
   }
 
-  /** foreachBatch LWW upsert sink over a parquet directory: merge the
-    * micro-batch with existing state, keep the newest row per key
-    * (`keyCol`, ordered by `orderCols` desc), atomically swap. The
-    * parquet analog of the reference's batch_write_item PutRequest
-    * loop (__main__.py:8-24,61-66) — idempotent re-runs, last write
-    * wins. Default key/order = the events contract; the curation
-    * pipeline reuses it keyed on content hash.
-    */
-  final class LwwParquetSink(path: String,
-    keyCol: String = "user_id",
-    orderCols: Seq[String] = Seq("ts", "event_id")) extends Serializable {
-    def merge(spark: SparkSession, batch: DataFrame): Unit = {
-      val cur =
-        if (Files.exists(Paths.get(path))) Some(spark.read.parquet(path))
-        else None
-      val unioned = cur.map(_.unionByName(batch)).getOrElse(batch)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCol).orderBy(orderCols.map(col(_).desc): _*)
-      val merged = unioned
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      val tmp = path + ".tmp"
-      merged.write.mode("overwrite").parquet(tmp)
-      // re-point atomically (parquet dir swap)
-      val target = Paths.get(path)
-      if (Files.exists(target)) {
-        val old = Paths.get(path + ".old")
-        deleteRecursively(old)
-        Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(old)
-      } else {
-        Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-
-    private def deleteRecursively(p: java.nio.file.Path): Unit =
-      graft.sinks.Layout.deleteRecursively(p)
-  }
-
-  /** Wire the events stream through the LWW sink (availableNow-style
-    * drain is up to the caller's trigger choice).
+  /** Wire the events stream through [[graft.sinks.LwwSink.merge]]:
+    * newest (ts, event_id) per user (availableNow-style drain is up to
+    * the caller's trigger choice).
     */
   def lwwUpsertQuery(spark: SparkSession, eventsDir: String, outPath: String,
-    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val sink = new LwwParquetSink(outPath)
+    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     eventsStream(spark, eventsDir)
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink.merge(batch.sparkSession, batch.toDF())
+        graft.sinks.LwwSink.merge(batch.sparkSession, batch.toDF(), outPath,
+          "user_id", "ts", "event_id", None)
       }
       .start()
-  }
 
   /** Composed streaming curation pipeline (VERDICT r4 item #5) — the
     * full document-intake workload as ONE streaming query, each stage
@@ -1068,7 +1028,7 @@ object Streams {
     *      final state equals the batch `min(doc_id) per hash` exactly
     *      regardless of arrival order;
     *   4. LWW sink: each update row REPLACES its hash's entry
-    *      ([[LwwParquetSink]] keyed on text_hash by batch id).
+    *      ([[graft.sinks.LwwSink]] keyed on text_hash by batch id).
     *
     * Mode-agnostic: applied to a BATCH frame this is a plain query —
     * StreamingCurateSpec runs the same function in both modes over
@@ -1097,19 +1057,19 @@ object Streams {
     */
   def curateQuery(spark: SparkSession, docsDir: String,
     evalShingles: Seq[String], outPath: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery = {
-    val sink = new LwwParquetSink(outPath, keyCol = "text_hash",
-      orderCols = Seq("batch_id"))
+    : org.apache.spark.sql.streaming.StreamingQuery =
     curateStream(docsStream(spark, docsDir), evalShingles)
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink.merge(batch.sparkSession,
-          batch.toDF().withColumn("batch_id", lit(id)))
+        // a replayed micro-batch meets its own identical rows under the
+        // same batch_id, so the key itself serves as the tie-break
+        graft.sinks.LwwSink.merge(batch.sparkSession,
+          batch.toDF().withColumn("batch_id", lit(id)), outPath,
+          "text_hash", "batch_id", "text_hash", None)
       }
       .start()
-  }
 
   /** Streaming form of the KV upsert: each micro-batch flows through
     * [[graft.sinks.KvSink.upsert]] — per-partition grouped PUT batches

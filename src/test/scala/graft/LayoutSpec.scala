@@ -152,4 +152,42 @@ class LayoutSpec extends AnyFunSuite {
       "scheme-qualified URI sized differently from the plain path")
     assert(Layout.sourceBytes(spark, s"$dir/no_such.parquet") == 0L)
   }
+
+  private lazy val orderCols = Tables(spark, dir, "orders")
+    .select("o_orderkey", "o_orderstatus", "o_totalprice")
+
+  private def rows(path: String) =
+    spark.read.parquet(path).select("o_orderkey", "o_orderstatus", "o_totalprice")
+      .orderBy("o_orderkey").collect().toSeq
+
+  test("compact takes a file:// URI path, partitioned and unpartitioned") {
+    val base = Files.createTempDirectory("layout_uri")
+    val want = orderCols.orderBy("o_orderkey").collect().toSeq
+    val flat = base.resolve("f").toUri.toString
+    orderCols.repartition(8).write.parquet(flat)
+    val st = Layout.compact(spark, flat)
+    assert(st.filesBefore == 8 && st.filesAfter == 1 && st.bytesTotal > 0)
+    assert(rows(flat) == want)
+    val part = base.resolve("p").toUri.toString
+    orderCols.repartition(8).write.partitionBy("o_orderstatus").parquet(part)
+    val pst = Layout.compact(spark, part, Some("o_orderstatus"))
+    assert(pst.filesAfter == orderCols.select("o_orderstatus").distinct().count())
+    assert(pst.filesBefore > pst.filesAfter)
+    assert(rows(part) == want)
+  }
+
+  test("a compaction that dies between its swap renames loses nothing: " +
+    "the next compaction restores the prior state and completes") {
+    val path = CrashingFs.path(spark,
+      Files.createTempDirectory("layout_crash").resolve("t"))
+    orderCols.repartition(8).write.parquet(path)
+    val want = rows(path)
+    val crash = intercept[java.io.IOException] {
+      CrashingFs.crashingOnce(Layout.compact(spark, path))
+    }
+    assert(crash.getMessage.contains("injected crash"))
+    val st = Layout.compact(spark, path)
+    assert(st.filesBefore == 8 && st.filesAfter == 1)
+    assert(rows(path) == want)
+  }
 }

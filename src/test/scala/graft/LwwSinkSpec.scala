@@ -60,4 +60,33 @@ class LwwSinkSpec extends AnyFunSuite {
       "id", "ts", "id", None)
     assert(state(flat) == Seq((1L, "a", 1L), (2L, "c", 1L)))
   }
+
+  test("a null version ranks lowest: a null-ts row loses to a non-null " +
+    "one, whatever its tie-break") {
+    val path = Files.createTempDirectory("lww_null").resolve("t").toString
+    LwwSink.merge(spark, Seq((1L, "dated", Option(1L), 0L))
+      .toDF("id", "v", "ts", "pos"), path, "id", "ts", "pos", None)
+    val b2 = Seq((1L, "undated", Option.empty[Long], 9L),
+      (2L, "only", Option.empty[Long], 0L)).toDF("id", "v", "ts", "pos")
+    LwwSink.merge(spark, b2, path, "id", "ts", "pos", None)
+    val got = spark.read.parquet(path).orderBy("id")
+      .select("id", "v", "ts").as[(Long, String, Option[Long])].collect().toSeq
+    assert(got == Seq((1L, "dated", Some(1L)), (2L, "only", None)))
+  }
+
+  test("an unpartitioned merge that dies between its swap renames " +
+    "loses nothing: the next merge sees the prior state plus its batch") {
+    val path = CrashingFs.path(spark,
+      Files.createTempDirectory("lww_crash").resolve("t"))
+    def merge(rows: (Long, String, Long)*): Unit =
+      LwwSink.merge(spark, rows.toDF("id", "v", "ts"), path, "id", "ts",
+        "id", None)
+    merge((1L, "a", 1L), (2L, "b", 1L))
+    val crash = intercept[java.io.IOException] {
+      CrashingFs.crashingOnce(merge((3L, "c", 1L)))
+    }
+    assert(crash.getMessage.contains("injected crash"))
+    merge((4L, "d", 1L))
+    assert(state(path) == Seq((1L, "a", 1L), (2L, "b", 1L), (4L, "d", 1L)))
+  }
 }

@@ -5,9 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Each engine mechanism has ONE owner in `src/main`, so a second,
   * drifting copy cannot come back unnoticed: sessions are built only
   * by [[Session]], lineage is truncated only through
-  * [[graft.operators.Checkpoints]], and the session-global shuffle
+  * [[graft.operators.Checkpoints]], the session-global shuffle
   * partition count is changed only by [[Session.withConf]], which
-  * restores it. Comments are ignored; only code lines count.
+  * restores it, and directories are moved only by
+  * [[graft.sinks.Layout]]'s crash-safe swap. Comments are ignored;
+  * only code lines count.
   */
 class SingleMechanismSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src/main")
@@ -47,7 +49,9 @@ class SingleMechanismSpec extends AnyFunSuite {
       "scala/graft/operators/Checkpoints.scala"),
     ("conf.set(\"spark.sql.shuffle.partitions\"",
       raw"""conf\s*\.\s*set\s*\(\s*"spark\.sql\.shuffle\.partitions"""",
-      "scala/graft/Session.scala"))
+      "scala/graft/Session.scala"),
+    ("ATOMIC_MOVE", raw"\bATOMIC_MOVE\b", "scala/graft/sinks/Layout.scala"),
+    (".rename(", raw"\.\s*rename\s*\(", "scala/graft/sinks/Layout.scala"))
 
   mechanisms.foreach { case (what, pattern, owner) =>
     test(s"$what appears only in $owner") {
