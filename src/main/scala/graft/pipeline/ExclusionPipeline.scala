@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{FormInputs, Scalars}
 import graft.sinks.LwwSink
@@ -36,37 +36,43 @@ object ExclusionPipeline {
     * AttributeError on `soup.form.find_all` and kills the whole run;
     * an engine drops the unparseable page instead of fabricating a
     * URL-only document for it.
-    * Output feeds [[detailsToDocuments]]. Fully distributed: parsing
-    * is one kernel call per page and branch; the only shuffle is the
-    * per-(id,key) last-wins aggregate.
+    * Output feeds [[detailsToDocuments]]. Fully distributed: each
+    * page is read once and parsed once; the only shuffle is the
+    * per-(id,key) last-wins aggregate. Two pages for one id are an
+    * error, not a silent merge: the aggregate counts each id's URL
+    * entries and fails the query on a second one.
     */
   def parsePages(pages: DataFrame, idCol: String = "id",
     pageCol: String = "page", urlCol: String = "url"): DataFrame = {
-    // The generator runs straight on the kernel, never on an alias of
-    // it: Catalyst infers `isnotnull(x) AND size(x) > 0` for a
-    // generator over an attribute x and pushes that Filter through
+    // One read of `pages`: the URL entry rides in the parsed array with
+    // the largest ord, so the last-wins aggregate lets it overwrite a
+    // scraped 'URL' key, and concat's null on a null parse keeps
+    // "no parseable form ⇒ NO rows". A second branch for the URL rows
+    // would scan the source twice (for a DataTables source, two count
+    // probes and two fetches of every page).
+    //
+    // The generator runs on an expression, never on an attribute or an
+    // alias of one: Catalyst infers `isnotnull(x) AND size(x) > 0` for
+    // a generator over an attribute x and pushes that Filter through
     // the projection by substituting x's definition, so an aliased
     // parse is evaluated again in the Filter. The previous
-    // Column-expression parse ("codegen'd top-level projections")
-    // lost most of its time there: its whole-form regex and lower()
-    // copies re-ran per exploded tag row, 1.1 s of a 3.1 s etl_load
-    // load. Here the kernel runs once per page in each union branch
-    // (PlanSpec guards it).
-    val pairs = pages
-      .select(col(idCol).as("id"), inline(FormInputs(col(pageCol))))
-    val deduped = lastByOrd(pairs)
-      .filter(col("key") =!= "__RequestVerificationToken" &&
-        col("key") =!= "URL")
-    // URL rows gate on the SAME parse (non-null = a complete first
-    // <form>…</form>) — an rlike("<form") here would fabricate a
-    // URL-only row for a page whose truncated/unclosed form yields no
-    // pairs, contradicting "no parseable form ⇒ NO rows"
-    val urlRows = pages
-      .filter(FormInputs(col(pageCol)).isNotNull)
-      .select(col(idCol).as("id"), lit("URL").as("key"),
-        col(urlCol).as("value"))
-    deduped.unionByName(urlRows)
+    // Column-expression parse lost most of its time there: its
+    // whole-form regex and lower() copies re-ran per exploded tag row,
+    // 1.1 s of a 3.1 s etl_load load (PlanSpec guards it).
+    val urlEntry = struct(lit(urlOrd).as("ord"), lit("URL").as("key"),
+      col(urlCol).as("value"))
+    val pairs = pages.select(col(idCol).as("id"),
+      inline(concat(FormInputs(col(pageCol)), array(urlEntry))))
+    lastByOrd(pairs, count_if(col("ord") === urlOrd).as("urls"))
+      .filter(col("key") =!= "__RequestVerificationToken")
+      .select(col("id"), col("key"),
+        when(col("urls") > 1, raise_error(
+          concat(lit("parsePages: more than one page for id "), col("id"))))
+          .otherwise(col("value")).as("value"))
   }
+
+  /** `ord` of a page's URL entry: above every tag position. */
+  private val urlOrd = Int.MaxValue
 
   /** Detail rows as scraped: one row per parsed `<input>` tag
     * (id, title, name, idx, value) — the _parse_input_tag shape
@@ -121,9 +127,11 @@ object ExclusionPipeline {
     * value at the largest `ord` (the tag position, UNIQUE within
     * (id, key)) — a partial-combining aggregate, so it reduces
     * map-side before the exchange instead of sorting after it.
+    * `extra` aggregates ride in the same pass.
     */
-  private def lastByOrd(pairs: DataFrame): DataFrame =
-    pairs.groupBy("id", "key").agg(max_by(col("value"), col("ord")).as("value"))
+  private def lastByOrd(pairs: DataFrame, extra: Column*): DataFrame =
+    pairs.groupBy("id", "key")
+      .agg(max_by(col("value"), col("ord")).as("value"), extra: _*)
 
   /** Merge summaries over detail documents: the reference assigns
     * summary values AFTER parsing the page, so summary wins on key

@@ -168,15 +168,27 @@ object Layout {
     (sizes.size, sizes.sum)
   }
 
-  /** Whether state exists at `target`, after restoring `<target>.old`
-    * when a [[swap]] died between its renames (a call only when
-    * `target` is missing: opening existing state makes exactly one).
+  /** Whether state exists at `target`, after a crashed swap's repair:
+    * `<target>.old` is renamed back when a [[swap]] died between its
+    * renames, and a [[swapPartitions]] backup goes back wherever its
+    * live partition is missing. Opening existing state makes two
+    * metadata calls when no swap crashed.
     */
-  private[sinks] def openState(fs: FileSystem, target: Path): Boolean =
-    fs.exists(target) || {
+  private[sinks] def openState(fs: FileSystem, target: Path): Boolean = {
+    val exists = fs.exists(target) || {
       val old = target.suffix(".old")
       fs.exists(old) && { rename(fs, old, target); true }
     }
+    val bak = backups(target)
+    if (exists && fs.exists(bak)) {
+      fs.listStatus(bak).foreach { s =>
+        val live = new Path(target, s.getPath.getName)
+        if (!fs.exists(live)) rename(fs, s.getPath, live)
+      }
+      fs.delete(bak, true)
+    }
+    exists
+  }
 
   /** Put `staging` live at `target`: drop a leftover `.old`, move the
     * `live` state to `.old`, `staging` to `target`, then drop `.old`.
@@ -191,6 +203,43 @@ object Layout {
     if (live) rename(fs, target, old)
     rename(fs, staging, target)
     fs.delete(old, true)
+  }
+
+  /** Put each partition directory of `staging` live under `target`,
+    * leaving every other partition as it is: move the live partition
+    * to [[backups]], the staged one in, and after the last partition
+    * drop the backups and `staging`. A crash leaves each partition
+    * whole at `target` or in the backups, where [[openState]] finds
+    * it; the partitions already swapped hold the new rows, which a
+    * re-run of the same merge writes again unchanged.
+    */
+  private[sinks] def swapPartitions(fs: FileSystem, staging: Path,
+    target: Path): Unit = {
+    val bak = backups(target)
+    fs.mkdirs(bak) // and `target`, on a first merge
+    val live = fs.listStatus(target).map(_.getPath.getName).toSet
+    for (s <- fs.listStatus(staging) if s.isDirectory && !hidden(s.getPath)) {
+      val name = s.getPath.getName
+      val dst = new Path(target, name)
+      if (live(name)) rename(fs, dst, new Path(bak, name))
+      rename(fs, s.getPath, dst)
+    }
+    fs.delete(bak, true)
+    fs.delete(staging, true)
+  }
+
+  /** Backup directory of [[swapPartitions]]: a dot name, which Spark's
+    * file listing skips. A `<part>.old` sibling would not do: inside
+    * the table, `Region=R0.old` reads back as a partition.
+    */
+  private def backups(target: Path): Path = new Path(target, ".backup")
+
+  /** A name Spark's file listing skips (`_SUCCESS`, `_temporary`,
+    * `.crc` files, [[backups]]); `_k=v` is a partition, not hidden.
+    */
+  private[sinks] def hidden(p: Path): Boolean = {
+    val n = p.getName
+    n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
   }
 
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =

@@ -35,7 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    whole table;
   *  - paging → one InputPartition per page, so a 100 TB-scale crawl
   *    fetches pages in parallel across executors instead of the
-  *    reference's fully serialized loop (__main__.py:48-57).
+  *    reference's fully serialized loop (__main__.py:48-57). The page
+  *    count comes from one count probe per scan per query execution
+  *    ([[DataTablesScan]]).
   *
   * The network transport is pluggable ([[DataTablesTransport]]);
   * this zero-egress build ships a fixture-backed transport. A real
@@ -215,6 +217,14 @@ class DataTablesScanBuilder(fullSchema: StructType,
     limit, pageSize, order, offset)
 }
 
+/** One pushed-down read: one count probe per scan per query execution.
+  * The page partitions are a lazy val here, not only on the exec node:
+  * `BatchScanExec.inputPartitions` is a lazy val of the node, and
+  * planning copies that node (the cache's plan, AQE's re-planning), so
+  * each copy would probe the server again. Every copy shares this
+  * Scan. A new execution builds a new Scan and probes afresh, so no
+  * count outlives its query.
+  */
 class DataTablesScan(schema: StructType, fetchCols: Seq[String],
   transportName: String, search: Option[(String, String)],
   limit: Option[Int], pageSize: Int, order: Seq[(String, Boolean)] = Nil,
@@ -227,7 +237,9 @@ class DataTablesScan(schema: StructType, fetchCols: Seq[String],
     s"DataTablesScan(search=$search, limit=$limit, pageSize=$pageSize, " +
       s"order=$order, offset=$offset)"
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  private lazy val partitions: Array[InputPartition] = {
     val transport = TransportRegistry.get(transportName)
     val total0 = transport.count(search.map(_._1), search.map(_._2))
     // pushed limit already INCLUDES the pushed offset (Catalyst sends

@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
 /** The local file system under its own `crashfs` scheme, whose
   * `rename` throws once, inside [[CrashingFs.crashingOnce]], when the
   * source is a staging directory (name ending `.staging` or
-  * `.compacting`): a process dying between a state swap's renames.
+  * `.compacting`) or lies directly under one (as does a staged
+  * partition, also in Spark's own `.spark-staging-<job>`): a process
+  * dying between a state swap's renames.
   * The FileSystem cache is off for the scheme, so every lookup builds
   * a fresh instance and the armed flag lives here in the companion.
   */
@@ -17,8 +19,7 @@ class CrashingFs extends RawLocalFileSystem {
   override def getScheme: String = CrashingFs.scheme
 
   override def rename(src: Path, dst: Path): Boolean = {
-    val n = src.getName
-    if ((n.endsWith(".staging") || n.endsWith(".compacting")) &&
+    if ((CrashingFs.staging(src) || Option(src.getParent).exists(CrashingFs.staging)) &&
       CrashingFs.armed.getAndSet(false))
       throw new java.io.IOException(s"injected crash renaming $src -> $dst")
     super.rename(src, dst)
@@ -40,6 +41,11 @@ object CrashingFs {
   val scheme = "crashfs"
   val uri: URI = URI.create(s"$scheme:///")
   private val armed = new AtomicBoolean(false)
+
+  private def staging(p: Path): Boolean = {
+    val n = p.getName
+    n.endsWith(".staging") || n.endsWith(".compacting") || n.startsWith(".spark-staging")
+  }
 
   /** `crashfs:` URI of local `dir`, with the scheme registered on the
     * session's Hadoop configuration.

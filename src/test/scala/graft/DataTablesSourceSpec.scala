@@ -157,6 +157,41 @@ class DataTablesSourceSpec extends AnyFunSuite {
       s"expected 1 page fetch, saw ${DataTablesSourceSpec.fetches.get()}")
   }
 
+  test("one count probe per scan per query execution: a cached " +
+    "summary-plus-parsePages frame probes each source once and fetches " +
+    "each detail page once; a new query probes again") {
+    import graft.pipeline.ExclusionPipeline
+    val probes = new AtomicInteger(0)
+    val detailFetches = new AtomicInteger(0)
+    val pages = (1 to 30).map { i =>
+      Map("id" -> f"$i%06d", "url" -> s"u$i",
+        "page" -> s"""<form><input title="Grade" value="g$i"/></form>""")
+    }
+    TransportRegistry.register("erc_probe_summary", CountingTransport(
+      FixtureTransport(records.take(30), "ID"), new AtomicInteger(0), probes))
+    TransportRegistry.register("erc_probe_detail", CountingTransport(
+      FixtureTransport(pages, "id"), detailFetches, probes))
+    def load(transport: String, cols: String) =
+      spark.read.format("graft.sources.datatables.DefaultSource")
+        .option("transport", transport).option("columns", cols)
+        .option("pageSize", "1000").load()
+    val summaries = load("erc_probe_summary", "ID,Company")
+      .withColumnRenamed("ID", "id")
+    val docs = ExclusionPipeline.mergeSummaries(
+      ExclusionPipeline.detailsToDocuments(ExclusionPipeline.parsePages(
+        load("erc_probe_detail", "id,page,url"))), summaries, Seq("Company"))
+    val out = Caches.cached(docs)
+    try {
+      assert(out.count() == 30)
+      assert(probes.get() == 2, s"count probes: ${probes.get()}")
+      assert(detailFetches.get() == 1, s"detail page fetches: ${detailFetches.get()}")
+    } finally out.unpersist()
+    // no count outlives its query: each new execution probes afresh
+    val detail = load("erc_probe_detail", "id,page,url")
+    assert(detail.count() == 30 && detail.count() == 30)
+    assert(probes.get() == 4, s"count probes: ${probes.get()}")
+  }
+
   test("non-default null ordering is not pushed (server sorts absent-as-empty)") {
     val top = read.orderBy(col("ID").asc_nulls_last).limit(5)
     val plan = top.queryExecution.executedPlan.toString
@@ -188,12 +223,15 @@ case class RecordingTransport(inner: DataTablesTransport,
 }
 
 /** Decorator counting page fetches — asserts the TopN pushdown's
-  * paging claim.
+  * paging claim — and count probes.
   */
-case class CountingTransport(inner: DataTablesTransport, counter: AtomicInteger)
+case class CountingTransport(inner: DataTablesTransport, counter: AtomicInteger,
+  probes: AtomicInteger = new AtomicInteger(0))
   extends DataTablesTransport {
-  override def count(sc: Option[String], sv: Option[String]): Long =
+  override def count(sc: Option[String], sv: Option[String]): Long = {
+    probes.incrementAndGet()
     inner.count(sc, sv)
+  }
   override def fetch(req: PageRequest): Seq[Seq[String]] = {
     counter.incrementAndGet()
     inner.fetch(req)

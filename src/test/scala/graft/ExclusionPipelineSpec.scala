@@ -219,4 +219,28 @@ class ExclusionPipelineSpec extends AnyFunSuite {
       .map(id => (id, "URL", s"U-$id"))
     assert(rowsOf(pages) == want ++ urls)
   }
+
+  test("parsePages: the URL entry overwrites a scraped URL key, and a " +
+    "null url still gives the page its URL row") {
+    val page = "<form><input title=\"URL\" value=\"scraped\"/>" +
+      "<input title=\"K\" value=\"v\"/></form>"
+    val pages = Seq(("1", page, "u1"), ("2", page, null.asInstanceOf[String]))
+      .toDF("id", "page", "url")
+    val got = ExclusionPipeline.parsePages(pages)
+      .as[(String, String, String)].collect().toSet
+    assert(got == Set(("1", "K", "v"), ("1", "URL", "u1"),
+      ("2", "K", "v"), ("2", "URL", null)))
+  }
+
+  test("parsePages: two pages for one id fail the query instead of " +
+    "merging silently") {
+    val pages = Seq(
+      ("1", "<form><input title=\"A\" value=\"a\"/></form>", "u1"),
+      ("1", "<form><input title=\"B\" value=\"b\"/></form>", "u1b"),
+      ("2", "<form><input title=\"A\" value=\"c\"/></form>", "u2"))
+      .toDF("id", "page", "url")
+    val e = intercept[Exception](ExclusionPipeline.parsePages(pages).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("more than one page for id 1")), e)
+  }
 }

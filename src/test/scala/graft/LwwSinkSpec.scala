@@ -89,4 +89,73 @@ class LwwSinkSpec extends AnyFunSuite {
     merge((4L, "d", 1L))
     assert(state(path) == Seq((1L, "a", 1L), (2L, "b", 1L), (4L, "d", 1L)))
   }
+
+  test("a partitioned merge that dies between its partition renames " +
+    "loses nothing: the next merge sees the prior state plus its batch") {
+    val path = CrashingFs.path(spark,
+      Files.createTempDirectory("lww_pcrash").resolve("t"))
+    def merge(rows: (Long, String, Long, String)*): Unit =
+      LwwSink.merge(spark, rows.toDF("id", "v", "ts", "part"), path, "id",
+        "ts", "id", Some("part"))
+    merge((1L, "a", 1L, "pA"), (2L, "b", 1L, "pB"))
+    val crash = intercept[Exception] {
+      CrashingFs.crashingOnce(merge((2L, "b2", 2L, "pB"), (3L, "c", 1L, "pB")))
+    }
+    assert(Iterator.iterate[Throwable](crash)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected crash")), crash)
+    merge((4L, "d", 1L, "pB"))
+    assert(state(path) == Seq((1L, "a", 1L), (2L, "b", 1L), (4L, "d", 1L)))
+  }
+
+  test("string partition values keep their type: \"007\" stays one " +
+    "partition and each key keeps one row") {
+    val path = Files.createTempDirectory("lww_strpart").resolve("t").toString
+    def batch(rows: (Long, String, Long, String)*) =
+      rows.toDF("id", "v", "ts", "part")
+    val b1 = batch((1L, "a", 1L, "007"), (2L, "b", 1L, "010"))
+    LwwSink.merge(spark, b1, path, "id", "ts", "id", Some("part"))
+    LwwSink.merge(spark, batch((1L, "a2", 2L, "007")), path, "id", "ts", "id",
+      Some("part"))
+    val got = spark.read.schema(b1.schema).parquet(path).orderBy("id")
+      .as[(Long, String, Long, String)].collect().toSeq
+    assert(got == Seq((1L, "a2", 2L, "007"), (2L, "b", 1L, "010")))
+  }
+
+  test("a null partition value merges like any other") {
+    val path = Files.createTempDirectory("lww_nullpart").resolve("t").toString
+    def merge(rows: (Long, String, Long, Option[String])*): Unit =
+      LwwSink.merge(spark, rows.toDF("id", "v", "ts", "part"), path, "id",
+        "ts", "id", Some("part"))
+    merge((1L, "a", 1L, None), (2L, "b", 1L, Some("pB")))
+    merge((1L, "a2", 2L, None), (3L, "c", 1L, None))
+    assert(state(path) == Seq((1L, "a2", 2L), (2L, "b", 1L), (3L, "c", 1L)))
+  }
+
+  test("a batch whose columns differ from the state's throws and " +
+    "leaves the state as it was") {
+    val path = Files.createTempDirectory("lww_cols").resolve("t").toString
+    LwwSink.merge(spark, Seq((1L, "a", 1L, "pA")).toDF("id", "v", "ts", "part"),
+      path, "id", "ts", "id", Some("part"))
+    val extra = Seq((2L, "b", 1L, "pA", "x")).toDF("id", "v", "ts", "part", "note")
+    intercept[Exception] {
+      LwwSink.merge(spark, extra, path, "id", "ts", "id", Some("part"))
+    }
+    val missing = Seq((2L, 1L, "pA")).toDF("id", "ts", "part")
+    intercept[Exception] {
+      LwwSink.merge(spark, missing, path, "id", "ts", "id", Some("part"))
+    }
+    assert(state(path) == Seq((1L, "a", 1L)))
+    val flat = Files.createTempDirectory("lww_cols_flat").resolve("t").toString
+    LwwSink.merge(spark, Seq((1L, "a", 1L)).toDF("id", "v", "ts"), flat,
+      "id", "ts", "id", None)
+    intercept[Exception] {
+      LwwSink.merge(spark, Seq((2L, "b", 1L, "x")).toDF("id", "v", "ts", "note"),
+        flat, "id", "ts", "id", None)
+    }
+    intercept[Exception] {
+      LwwSink.merge(spark, Seq((2L, 1L)).toDF("id", "ts"), flat, "id", "ts",
+        "id", None)
+    }
+    assert(state(flat) == Seq((1L, "a", 1L)))
+  }
 }
