@@ -91,15 +91,4 @@ object Scalars {
     * clients/exclusion_requests.py:158, as a reusable building block).
     */
   def nullIfEmpty(c: Column): Column = when(length(trim(c)) > 0, trim(c))
-
-  /** Python `str(value).strip()` (clients/exclusion_requests.py:53):
-    * None stringifies to 'None' (which then SURVIVES the non-empty
-    * filter — the reference's famous quirk), and strip removes ALL
-    * whitespace, not just spaces (Spark's trim() is space-only) —
-    * btrim with Java regex \s's exact character set, a literal
-    * set-trim instead of a per-value regex.
-    */
-  def pyStr(c: Column): Column =
-    btrim(coalesce(c.cast("string"), lit("None")),
-      lit(" \t\n\u000B\f\r"))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -706,18 +707,24 @@ object GraphOps {
     // catalog entry (the catalog is in-memory); drop + delete so the
     // CTAS never trips over a non-empty location
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val loc = java.nio.file.Paths.get(
-      s.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), tbl).toString
-    graft.sinks.Layout.deleteRecursively(java.nio.file.Paths.get(loc))
+    val loc = substrateLocation(s.conf.get("spark.sql.warehouse.dir"), tbl)
+    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
     // repartition on the bucket key first: bucketed writers emit one
     // file per (task, bucket), so without it every task sprays all
     // `buckets` files
     edges.repartition(buckets, col("src"))
-      .write.mode("overwrite").format("parquet").option("path", loc)
+      .write.mode("overwrite").format("parquet").option("path", loc.toString)
       .bucketBy(buckets, "src").sortBy("src").saveAsTable(tbl)
     tbl
   }
+
+  /** The substrate table's directory under the warehouse: a Hadoop
+    * path, so an `hdfs://` or `s3a://` warehouse keeps its scheme and
+    * authority (a `java.nio` path reads such a URI as a relative
+    * local file name).
+    */
+  private[graft] def substrateLocation(warehouseDir: String, tbl: String): Path =
+    new Path(warehouseDir, tbl)
 
   private[graft] def coEdgesEnc(s: SparkSession, dir: String): DataFrame = {
     // memoize a lazily-RUN FutureTask, not the result: the r8 shape ran

@@ -901,15 +901,12 @@ object Relational {
   // ── §2.5 windows ───────────────────────────────────────────────────
 
   /** W1: last-write-wins dedup — the DynamoDB PUT-by-ID semantics
-    * (__main__.py:11-23) as a ranking window; one shuffle on the
-    * dedup key, tie-broken by event_id for determinism.
+    * (__main__.py:11-23) through the engine's LWW reduce,
+    * [[LwwSink.reduce]]: one shuffle on the dedup key, tie-broken by
+    * event_id for determinism.
     */
   def q_window_dedup_lww(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    t(s, dir, "events")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    LwwSink.reduce(t(s, dir, "events"), Seq("user_id"), col("ts"), col("event_id"))
       .select("user_id", "event_id", "event_type", "value")
       .orderBy("user_id")
   }
@@ -2350,10 +2347,10 @@ object Relational {
     val cutoff = lit("2024-01-16 00:00:00").cast("timestamp")
     val ev = t(s, dir, "events")
     val snap = LwwSink.reduce(ev.filter(col("ts") < cutoff),
-      "user_id", col("ts"), col("event_id"))
+      Seq("user_id"), col("ts"), col("event_id"))
       .select(col("user_id"), col("event_type").as("snap_et"))
     val delta = LwwSink.reduce(ev.filter(col("ts") >= cutoff),
-      "user_id", col("ts"), col("event_id"))
+      Seq("user_id"), col("ts"), col("event_id"))
       .select(col("user_id"), col("event_type").as("delta_et"))
     snap.join(delta, Seq("user_id"), "full_outer")
       .select(col("user_id"),

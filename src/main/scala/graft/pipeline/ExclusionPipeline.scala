@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{FormInputs, Scalars}
 import graft.sinks.LwwSink
@@ -10,8 +10,8 @@ import graft.sinks.LwwSink
   * serialized scrape loop + per-record Python transforms
   * (/root/reference/__main__.py:36-121) becomes
   *
-  *   summaries (S1 source) ⋈ details (S2 key/value rows)
-  *     → normalize keys (F1–F3) → drop noise (P3/P4)
+  *   summaries (S1 source) ⋈ detail pages (S2) parsed to key/value
+  *     rows → normalize keys (F1–F3) → drop noise (P3/P4)
   *     → pivot to document → summary-overwrites-detail merge (J1)
   *     → typify (F6) → LWW dedup by id (W1/S6) → sink-ready table
   *
@@ -61,9 +61,16 @@ object ExclusionPipeline {
     // 1.1 s of a 3.1 s etl_load load (PlanSpec guards it).
     val urlEntry = struct(lit(urlOrd).as("ord"), lit("URL").as("key"),
       col(urlCol).as("value"))
-    val pairs = pages.select(col(idCol).as("id"),
-      inline(concat(FormInputs(col(pageCol)), array(urlEntry))))
-    lastByOrd(pairs, count_if(col("ord") === urlOrd).as("urls"))
+    // The dict build's last-occurrence-wins (:159) is a partial-combining
+    // aggregate: per (id, key), the value at the largest `ord` (the tag
+    // position, unique within (id, key)), reduced map-side before the
+    // exchange instead of sorted after it. The URL count rides in the
+    // same pass.
+    pages.select(col(idCol).as("id"),
+        inline(concat(FormInputs(col(pageCol)), array(urlEntry))))
+      .groupBy("id", "key")
+      .agg(max_by(col("value"), col("ord")).as("value"),
+        count_if(col("ord") === urlOrd).as("urls"))
       .filter(col("key") =!= "__RequestVerificationToken")
       .select(col("id"), col("key"),
         when(col("urls") > 1, raise_error(
@@ -74,64 +81,21 @@ object ExclusionPipeline {
   /** `ord` of a page's URL entry: above every tag position. */
   private val urlOrd = Int.MaxValue
 
-  /** Detail rows as scraped: one row per parsed `<input>` tag
-    * (id, title, name, idx, value) — the _parse_input_tag shape
-    * (clients/exclusion_requests.py:39-54), with the reference's EXACT
-    * semantics (matching the parsePages/FormInputs path):
-    *  - key: title → name → Untitled<idx> with Python truthiness ("" is
-    *    falsy, " " is truthy) and NO trim — the reference never strips
-    *    keys (:40-48); markers removed anywhere (:45-48);
-    *  - value: str(value).strip() — str(None) = 'None' survives the
-    *    non-empty filter (:53,158), strip removes all whitespace;
-    *  - `ord` (the tag index) rides along so the dict-build
-    *    last-occurrence-wins (:159) stays decidable downstream.
-    */
-  def normalizeDetails(details: DataFrame): DataFrame =
-    details
-      .select(
-        col("id"),
-        Scalars.stripMarkers(
-          when(length(col("title")) > 0, col("title"))
-            .when(length(col("name")) > 0, col("name"))
-            .otherwise(concat(lit("Untitled"), col("idx").cast("string"))))
-          .as("key"),
-        Scalars.pyStr(col("value")).as("value"),
-        col("idx").as("ord"))
-      // empty-value drop (:158) + verification-token de-noise (:161-164)
-      .filter(length(col("value")) > 0 &&
-        col("key") =!= "__RequestVerificationToken")
-
-  /** Pivot normalized key/value detail rows into one document row per
-    * id with an open-shape map column (SURVEY §1: fixed StructType up
-    * front, dynamic tail in MapType). Input with an `ord` column
-    * ([[normalizeDetails]]) first resolves duplicate keys through
-    * [[lastByOrd]], the step [[parsePages]] already applied to its own
-    * output; input without `ord` must be unique per (id, key), since
-    * map_from_entries THROWS on a duplicate key under Spark's default
+  /** Pivot [[parsePages]]' (id, key, value) rows into one document row
+    * per id with an open-shape map column (SURVEY §1: fixed StructType
+    * up front, dynamic tail in MapType). The rows must be unique per
+    * (id, key), as [[parsePages]] leaves them: map_from_entries THROWS
+    * on a duplicate key under Spark's default
     * mapKeyDedupPolicy=EXCEPTION.
     */
-  def detailsToDocuments(normalized: DataFrame): DataFrame = {
-    val pairs =
-      if (normalized.columns.contains("ord")) lastByOrd(normalized)
-      else normalized
+  def detailsToDocuments(normalized: DataFrame): DataFrame =
     // entries in key order: collect_list keeps the shuffle's arrival
     // order, so an unsorted map (its KV item string, its parquet
     // bytes) would vary with partitioning
-    pairs
+    normalized
       .groupBy("id")
       .agg(map_from_entries(sort_array(
         collect_list(struct(col("key"), col("value"))))).as("fields"))
-  }
-
-  /** The dict build's last-occurrence-wins (:159): per (id, key), the
-    * value at the largest `ord` (the tag position, UNIQUE within
-    * (id, key)) — a partial-combining aggregate, so it reduces
-    * map-side before the exchange instead of sorting after it.
-    * `extra` aggregates ride in the same pass.
-    */
-  private def lastByOrd(pairs: DataFrame, extra: Column*): DataFrame =
-    pairs.groupBy("id", "key")
-      .agg(max_by(col("value"), col("ord")).as("value"), extra: _*)
 
   /** Merge summaries over detail documents: the reference assigns
     * summary values AFTER parsing the page, so summary wins on key
@@ -209,18 +173,19 @@ object ExclusionPipeline {
       .orderBy("doc_id", "key")
   }
 
-  /** End-to-end E1: summaries source + raw detail rows → load-ready
-    * exclusion-request table.
+  /** End-to-end E1: summaries source + detail pages (id, page, url)
+    * → load-ready exclusion-request table, through the same stages an
+    * incremental load runs before its sinks.
     */
-  def run(spark: SparkSession, summaries: DataFrame, rawDetails: DataFrame,
+  def run(spark: SparkSession, summaries: DataFrame, pages: DataFrame,
     summaryCols: Seq[String], longCols: Seq[String],
     doubleCols: Seq[String]): DataFrame = {
-    val docs = detailsToDocuments(normalizeDetails(rawDetails))
+    val docs = detailsToDocuments(parsePages(pages))
     val merged = mergeSummaries(docs, summaries, summaryCols)
     val typed = typifyColumns(merged, longCols, doubleCols)
     // last-write-wins upsert semantics of the DynamoDB PUT sink
     // (__main__.py:11-23): of N versions of an id, the latest
     // `scrape_ts` (tie-break: highest batch position) survives
-    LwwSink.reduce(typed, "id", col("scrape_ts"), col("scrape_pos"))
+    LwwSink.reduce(typed, Seq("id"), col("scrape_ts"), col("scrape_pos"))
   }
 }

@@ -60,7 +60,7 @@ object KvSink {
     */
   def upsert(df: DataFrame, idField: String, ts: String, tieBreak: String,
     clientFor: KvClientFactory, batchSize: Int = defaultBatchSize): Unit = {
-    val deduped = LwwSink.reduce(df, idField, col(ts), col(tieBreak))
+    val deduped = LwwSink.reduce(df, Seq(idField), col(ts), col(tieBreak))
     val cols = deduped.columns
     deduped.foreachPartition { rows: Iterator[Row] =>
       val client = clientFor()

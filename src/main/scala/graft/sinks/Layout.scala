@@ -245,9 +245,12 @@ object Layout {
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) sys.error(s"rename failed: $from -> $to")
 
-  /** Shared by the graph substrate and the streaming landing zone —
-    * one definition so a future hardening (symlinks, delete races)
-    * lands everywhere.
+  /** Deletes a LOCAL directory tree: the streaming drains' checkpoint
+    * and landing dirs and the stream fixture slices, all under local
+    * scratch. A path that may be a URI (`hdfs://`, `s3a://`) goes
+    * through its Hadoop `FileSystem` instead, as the graph substrate
+    * and the sinks do. One definition, so a future hardening
+    * (symlinks, delete races) lands everywhere.
     */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {

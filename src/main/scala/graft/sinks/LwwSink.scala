@@ -64,7 +64,7 @@ object LwwSink {
     val staging = target.suffix(".staging")
     def state = readState(spark, fs, target, batch.schema, partition)
     def merged(cur: Option[DataFrame]) =
-      reduce(cur.fold(batch)(_.unionByName(batch)), key, col(ts), col(tieBreak))
+      reduce(cur.fold(batch)(_.unionByName(batch)), Seq(key), col(ts), col(tieBreak))
     partition match {
       case Some(p) =>
         // only touched partitions participate in the merge; untouched
@@ -121,17 +121,19 @@ object LwwSink {
       .flatMap(s => if (s.isDirectory) dataFile(fs, s.getPath) else Some(s.getPath))
       .nextOption()
 
-  /** Newest row per `key`: the one that sorts first on `order`, each
-    * column descending. A null in an order column ranks LOWEST (a
-    * null-ts row loses to any dated one), and the `order` tuple, e.g.
-    * (ts, tieBreak), must be unique per key: on an exact tie the
-    * survivor is whichever row the sort meets first. A window, not
-    * `max_by(struct(row), struct(order))`: with mostly-unique keys the
-    * partial combine saves nothing, and the immutable struct buffer
-    * plans a SortAggregate that sorts on both sides of the exchange.
+  /** Newest row per `key` (one or more columns): the one that sorts
+    * first on `order`, each column descending. A null in an order
+    * column ranks LOWEST (a null-ts row loses to any dated one), and
+    * the `order` tuple, e.g. (ts, tieBreak), must be unique per key: on
+    * an exact tie the survivor is whichever row the sort meets first.
+    * A window, not `max_by(struct(row), struct(order))`: with
+    * mostly-unique keys the partial combine saves nothing, and the
+    * immutable struct buffer plans a SortAggregate that sorts on both
+    * sides of the exchange.
     */
-  def reduce(df: DataFrame, key: String, order: Column*): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(order.map(_.desc_nulls_last): _*)
+  def reduce(df: DataFrame, key: Seq[String], order: Column*): DataFrame = {
+    require(key.nonEmpty, "reduce needs a key column")
+    val w = Window.partitionBy(key.map(col): _*).orderBy(order.map(_.desc_nulls_last): _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }

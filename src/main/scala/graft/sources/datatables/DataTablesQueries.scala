@@ -42,9 +42,9 @@ object DataTablesQueries {
     }
 
   def q_datatables_scan(s: SparkSession, dir: String): DataFrame = {
-    // idempotent per-call registration (driver + executors share the
-    // JVM in local mode; a cluster deployment would construct an HTTP
-    // transport from options instead — no registry involved)
+    // idempotent per-call registration: the registry is JVM-local, so
+    // this works only where driver and executors share the JVM (local
+    // mode); an HTTP transport reaches the scan the same way
     TransportRegistry.register("erc_declared",
       FixtureTransport(fixtureRecords, "ID"))
     val df = s.read.format("graft.sources.datatables.DefaultSource")

@@ -39,11 +39,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    count comes from one count probe per scan per query execution
   *    ([[DataTablesScan]]).
   *
-  * The network transport is pluggable ([[DataTablesTransport]]);
-  * this zero-egress build ships a fixture-backed transport. A real
-  * deployment implements one HTTP POST per [[PageRequest]] — the
-  * session/CSRF bootstrap (S4) and retry policy (S5) live inside
-  * that transport's `open()`, as connector concerns.
+  * The network transport is pluggable ([[DataTablesTransport]]):
+  * [[HttpTransport]] makes one HTTP POST per [[PageRequest]], wrapped
+  * in [[RetryingTransport]] for the retry policy (S5), with the
+  * session/CSRF headers from [[SessionBootstrap]] (S4); a
+  * fixture-backed transport serves the declared queries and tests.
+  * Every transport, HTTP included, reaches the scan only by name
+  * through the JVM-local [[TransportRegistry]]: the `transport` option
+  * names a registration, and no option builds a transport. The
+  * driver's count probe and the executors' page fetches look that
+  * name up in their own JVM, so reads work in local mode only.
   */
 class DefaultSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -77,9 +82,10 @@ trait DataTablesTransport extends Serializable {
   def fetch(req: PageRequest): Seq[Seq[String]]
 }
 
-/** Driver/executor-local registry for fixture transports (tests /
-  * local mode). Real HTTP transports are constructed from options
-  * instead and need no registry.
+/** JVM-local registry: the only way any transport, fixture or HTTP,
+  * reaches a scan. A registration made on the driver is invisible to
+  * executors in other JVMs, so a cluster read fails its page fetches
+  * with "no transport registered"; reads work in local mode only.
   */
 object TransportRegistry {
   private val transports =

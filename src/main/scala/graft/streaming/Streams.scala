@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.sinks.LwwSink
 
 /** Structured Streaming surface (SURVEY §2.10). The reference is
   * batch-only, but its write path is a hand-rolled micro-batcher:
@@ -605,10 +606,7 @@ object Streams {
     val events = eventsStream(s, evDir)
     drainAndProject(s, currentHistSnapshots(s, events, boundary2),
       OutputMode.Update, "stream_psi", Seq(evDir)) { sink =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("rev").desc)
-      val cur = sink.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      val cur = LwwSink.reduce(sink, Seq("event_type"), col("rev"))
         .select(col("event_type"), explode(map_entries(col("bins"))).as("kv"))
         .select(col("event_type"), col("kv.key").as("bin"),
           col("kv.value").as("c_cur"))
@@ -968,10 +966,7 @@ object Streams {
     val events = eventsStream(s, evDir)
     drainAndProject(s, funnelStages(s, events),
       OutputMode.Update, "stream_funnel", Seq(evDir)) { sink =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("rev").desc)
-      val last = sink.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      val last = LwwSink.reduce(sink, Seq("user_id"), col("rev"))
       last.agg(
           sum(when(col("v") >= 0, 1L).otherwise(0L)).as("nv"),
           sum(when(col("c") >= 0, 1L).otherwise(0L)).as("nc"),
@@ -1001,7 +996,7 @@ object Streams {
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sinks.LwwSink.merge(batch.sparkSession, batch.toDF(), outPath,
+        LwwSink.merge(batch.sparkSession, batch.toDF(), outPath,
           "user_id", "ts", "event_id", None)
       }
       .start()
@@ -1065,7 +1060,7 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         // a replayed micro-batch meets its own identical rows under the
         // same batch_id, so the key itself serves as the tie-break
-        graft.sinks.LwwSink.merge(batch.sparkSession,
+        LwwSink.merge(batch.sparkSession,
           batch.toDF().withColumn("batch_id", lit(id)), outPath,
           "text_hash", "batch_id", "text_hash", None)
       }
@@ -1302,12 +1297,7 @@ object Streams {
     val schema = out.schema
     // checkpoint + landing dirs are per-invocation scratch — drop
     // them so repeated bench passes don't accumulate state
-    Seq(ck, land).foreach { d =>
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    Seq(ck, land).foreach(graft.sinks.Layout.deleteRecursively)
     (spark.createDataFrame(rows, schema), evidence)
   }
 
@@ -1372,10 +1362,7 @@ object Streams {
     val events = eventsStream(s, evDir)
     drainAndProject(s, retentionSnapshots(s, events),
       OutputMode.Update, "stream_retention", Seq(evDir)) { sink =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("rev").desc)
-      sink.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      LwwSink.reduce(sink, Seq("user_id"), col("rev"))
         .select(
           date_add(lit("1970-01-01").cast("date"),
             col("cohort_day").cast("int")).as("cohort_week"),
@@ -1404,10 +1391,7 @@ object Streams {
     val events = eventsStream(s, eventsDir, maxFiles)
     drainWithEvidence(s, sessionSnapshots(s, events),
       OutputMode.Update, "stream_sessionize", Seq(eventsDir)) { sink =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id", "session_id").orderBy(col("rev").desc)
-      sink.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      LwwSink.reduce(sink, Seq("user_id", "session_id"), col("rev"))
         .groupBy("n_events")
         .agg(count(lit(1)).as("n_sessions"),
           sum(col("end_s") - col("start_s")).as("sum_duration_s"))
@@ -1556,10 +1540,7 @@ object Streams {
     val events = eventsStream(s, evDir)
     drainAndProject(s, topkPerType(s, events),
       OutputMode.Update, "stream_topk", Seq(evDir)) { sink =>
-      val byType = org.apache.spark.sql.expressions.Window
-        .partitionBy("_1").orderBy(col("_2").desc)
-      sink.withColumn("rn", row_number().over(byType))
-        .filter(col("rn") === 1)
+      LwwSink.reduce(sink, Seq("_1"), col("_2"))
         .select(col("_1").as("event_type"), posexplode(col("_3"))
           .as(Seq("rk0", "p")))
         .select(col("event_type"),
@@ -1610,10 +1591,7 @@ object Streams {
     maxFiles.foreach(n => r.option("maxFilesPerTrigger", n))
     drainWithEvidence(s, dedupState(s, r.parquet(docsDir)),
       OutputMode.Update, "stream_dedup", Seq(docsDir)) { sink =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("_1").orderBy(col("_3").desc)
-      sink.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      LwwSink.reduce(sink, Seq("_1"), col("_3"))
         .select(col("_1").as("text_hash"), col("_2").as("keep_id"),
           col("_3").as("n_copies"))
         .orderBy("text_hash")
@@ -1631,10 +1609,7 @@ object Streams {
     val events = eventsStream(s, eventsDir, maxFiles)
     drainWithEvidence(s, statefulLww(s, events),
       OutputMode.Update, "stream_lww", Seq(eventsDir)) { sink =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
-      sink.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      LwwSink.reduce(sink, Seq("user_id"), col("ts"), col("event_id"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_winners"),
           round(sum(col("value").cast("decimal(18,4)")).cast("double"), 4)

@@ -13,18 +13,28 @@ class ExclusionPipelineSpec extends AnyFunSuite {
 
   private def ts(s: Long) = new Timestamp(s * 1000)
 
-  // (id, title, name, idx, value) — _parse_input_tag shape
-  private val rawDetails = Seq(
-    ("1", "BIS232Request.Product", null, 0, "steel pipe"),
-    ("1", null, "JSONData.Grade", 1, "X42"),
-    ("1", null, null, 3, "untitled-value"),       // → Untitled3
-    ("1", "Empty", null, 4, ""),                  // dropped (empty)
-    ("1", "__RequestVerificationToken", null, 5, "tok"), // dropped (noise)
-    ("1", "Minimum Thickness", null, 6, "0.25"),
-    ("2", "BIS232Request.Product", null, 0, "rebar"),
-    ("2", "HTSUSCode", null, 1, "731815"),        // overwritten by summary
-    ("9", "BIS232Objection.Org", null, 0, "ACME") // detail-only id
-  ).toDF("id", "title", "name", "idx", "value")
+  private def url(id: String) = s"https://example.test/Forms/ExclusionRequestItem/$id"
+
+  // (id, page, url) — one fetched detail page per id
+  private val detailPages = Seq(
+    // the hidden input is tag 3 → Untitled3; Empty (empty value) and
+    // the verification token (noise) are dropped
+    "1" -> """<form>
+      |  <input title="BIS232Request.Product" value="steel pipe"/>
+      |  <input name="JSONData.Grade" value="X42"/>
+      |  <input title="Empty" value=""/>
+      |  <input type="hidden" value="untitled-value"/>
+      |  <input title="__RequestVerificationToken" value="tok"/>
+      |  <input title="Minimum Thickness" value="0.25"/>
+      |</form>""".stripMargin,
+    // HTSUSCode is overwritten by the summary
+    "2" -> """<form>
+      |  <input title="BIS232Request.Product" value="rebar"/>
+      |  <input title="HTSUSCode" value="731815"/>
+      |</form>""".stripMargin,
+    // detail-only id
+    "9" -> """<form><input title="BIS232Objection.Org" value="ACME"/></form>"""
+  ).map { case (id, page) => (id, page, url(id)) }.toDF("id", "page", "url")
 
   private val summaries = Seq(
     ("1", "CoA", "722230", "1E1771", ts(100), 0L),
@@ -33,7 +43,7 @@ class ExclusionPipelineSpec extends AnyFunSuite {
     ("2", "CoB2", "731817", "4.20", ts(200), 2L)
   ).toDF("id", "Company", "HTSUSCode", "Payload", "scrape_ts", "scrape_pos")
 
-  private lazy val out = ExclusionPipeline.run(spark, summaries, rawDetails,
+  private lazy val out = ExclusionPipeline.run(spark, summaries, detailPages,
     summaryCols = Seq("Company", "HTSUSCode", "Payload"),
     longCols = Seq("HTSUSCode"),
     doubleCols = Seq("Payload"))
@@ -60,6 +70,7 @@ class ExclusionPipelineSpec extends AnyFunSuite {
     assert(!f1.contains("Empty"))
     assert(!f1.contains("__RequestVerificationToken"))
     assert(f1("Minimum Thickness") == "0.25")
+    assert(f1("URL") == url("1"))
   }
 
   test("typify: guard blocks 1E1771, float leg converts 4.20") {

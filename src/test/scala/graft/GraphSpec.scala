@@ -105,6 +105,14 @@ class GraphSpec extends AnyFunSuite {
     Caches.releaseAll()
   }
 
+  test("the edge substrate's location keeps a URI warehouse's scheme " +
+    "and authority") {
+    assert(GraphOps.substrateLocation("hdfs://nn/wh", "graft_edges_x").toString ==
+      "hdfs://nn/wh/graft_edges_x")
+    assert(GraphOps.substrateLocation("file:/tmp/wh", "graft_edges_x").toString ==
+      "file:/tmp/wh/graft_edges_x")
+  }
+
   test("triangleCounts: K4 + pendant + isolated edge, exact counts") {
     import spark.implicits._
     // K4 on {1,2,3,4} (4 triangles, every node in 3), pendant 5 off

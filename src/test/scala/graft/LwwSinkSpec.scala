@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sinks.LwwSink
 
@@ -157,5 +158,14 @@ class LwwSinkSpec extends AnyFunSuite {
         "id", None)
     }
     assert(state(flat) == Seq((1L, "a", 1L)))
+  }
+
+  test("reduce keeps the newest row per two-column key") {
+    val df = Seq((1L, "a", 1L, "old"), (1L, "a", 2L, "new"), (1L, "b", 1L, "other"),
+      (2L, "a", 3L, "two")).toDF("user", "session", "rev", "v")
+    val got = LwwSink.reduce(df, Seq("user", "session"), col("rev"))
+    assert(got.columns.toSeq == df.columns.toSeq)
+    assert(got.orderBy("user", "session").as[(Long, String, Long, String)].collect().toSeq ==
+      Seq((1L, "a", 2L, "new"), (1L, "b", 1L, "other"), (2L, "a", 3L, "two")))
   }
 }
